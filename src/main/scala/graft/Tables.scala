@@ -2,11 +2,41 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Uniform access to the driver-provided parquet tables
   * (`/root/testdata/sf*`; see TESTDATA.md / FIXTURES.md §B).
   */
 object Tables {
+
+  /** Inferred parquet schemas keyed by (session, path, listing signature:
+    * every file's path, length and mtime). Inference launches a one-task
+    * footer job, which every dashboard read paid once per table it
+    * scans. A rewritten table changes its signature and is inferred
+    * afresh. Cleared by [[graft.ops.Memo.clearAll]], so a bench pass that
+    * clears the memos reads cold.
+    */
+  private val schemaMemo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Seq[(String, Long, Long)]), StructType]
+  graft.ops.Memo.onClear(() => schemaMemo.clear())
+
+  private def listingSignature(spark: SparkSession,
+                               path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listFiles(p, true)
+    val sig = Seq.newBuilder[(String, Long, Long)]
+    while (files.hasNext) {
+      val f = files.next()
+      sig += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    sig.result().sorted
+  }
+
+  /** Reads `<sfDir>/<name>.parquet` with its schema resolved once per
+    * session and listing signature (see [[schemaMemo]]) and passed to
+    * `spark.read.schema`, so a repeated read launches only its own jobs.
+    */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Older fixture generations wrote events.ts as parquet TIMESTAMP(NANOS),
     // which the Spark reader rejects ([PARQUET_TYPE_ILLEGAL]) unless read as
@@ -15,7 +45,11 @@ object Tables {
     // (every entry point pins spark.sql.session.timeZone=UTC, so the NTZ→LTZ
     // cast is instant-preserving and matches the old nanos-epoch semantics).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val schema = schemaMemo.getOrElseUpdate(
+      (spark, path, listingSignature(spark, path)),
+      spark.read.parquet(path).schema)
+    val df = spark.read.schema(schema).parquet(path)
     if (name == "events") df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // nanos since epoch → TimestampType (µs). `div` keeps integer math.

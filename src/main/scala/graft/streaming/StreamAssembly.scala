@@ -276,23 +276,28 @@ object StreamAssembly {
     walk(new java.io.File(dir))
   }
 
+  /** Sized from the largest staged file across `srcDirs` (a drain that
+    * streams several staged sources takes each trigger's file from any
+    * of them); no known source dir derives 1.
+    */
   private[graft] def drainPartitionsFor(spark: SparkSession,
-                                        srcDir: String): Int =
+                                        srcDirs: String*): Int =
     drainPartitionsForTest.orElse(DrainPartitionsEnv).getOrElse {
-      if (srcDir == null) 1
+      val dirs = srcDirs.filter(_ != null)
+      if (dirs.isEmpty) 1
       else math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
-        (maxStagedFileBytes(srcDir) + DrainTargetBatchBytes - 1) /
+        (dirs.map(maxStagedFileBytes).max + DrainTargetBatchBytes - 1) /
           DrainTargetBatchBytes)).toInt
     }
 
   private def withDrainConf[T](spark: SparkSession,
                                extra: Map[String, String] = Map.empty,
-                               srcDir: String = null)
+                               srcDirs: Seq[String] = Nil)
                               (body: SparkSession => T): T = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions",
-      drainPartitionsFor(spark, srcDir).toString)
+      drainPartitionsFor(spark, srcDirs: _*).toString)
     extra.foreach { case (k, v) => s.conf.set(k, v) }
     body(s)
   }
@@ -383,9 +388,28 @@ object StreamAssembly {
   /** A3 option (b) — the faithful SummingMergeTree mirror: each micro-batch
     * appends its block-local partial aggregate (what the ClickHouse MV
     * inserts per block, `01_init.sql:63-74`); readers fold partials with
-    * [[graft.ops.Rollups.rollupCompact]]-style `groupBy.sum` (what CK does
-    * lazily at merge/read time). No streaming state at all — state lives in
-    * the storage layout, so this scales to unbounded keys.
+    * [[compactHourlyPartials]] (what CK does lazily at merge/read time). No
+    * streaming state at all — state lives in the storage layout, so this
+    * scales to unbounded keys.
+    *
+    * Layout: FLAT. Each micro-batch writes its partials under the hidden
+    * `<outDir>/_staging/batch=<id>`, then renames the part file(s) to
+    * `<outDir>/batch-<id>-<k>.parquet`. A reader lists one directory and
+    * never sees a half-written file (`_`-prefixed paths are hidden from
+    * the file index). A per-batch `batch=<id>` tree would make every read
+    * list one directory per micro-batch — past Spark's 32-path
+    * `parallelPartitionDiscovery.threshold` a listing JOB that grows with
+    * the stream's age. The finite drains below keep `batch=<id>`: they
+    * stop at a handful of batches, under that threshold.
+    *
+    * Replay contract: a micro-batch retried after a crash between the
+    * rename and the checkpoint commit first deletes every
+    * `batch-<id>-*` file an earlier attempt left, so the replay REPLACES
+    * the batch's partials instead of appending a duplicate set (which
+    * would silently double the compacted totals on recovery).
+    *
+    * A directory holding both the flat files and `batch=<id>` trees
+    * fails partition discovery: start this sink in a fresh directory.
     */
   def startHourlyPartialsSink(orders: DataFrame, outDir: String,
                               checkpointDir: String,
@@ -395,11 +419,7 @@ object StreamAssembly {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // IDEMPOTENT per-batch commit: each micro-batch OVERWRITES its own
-        // batch=<id> partition dir, so a replay after a crash between the
-        // parquet write and the checkpoint commit rewrites the same
-        // partials instead of appending a duplicate set (a plain append
-        // here would silently double compacted totals on recovery)
+        val staged = s"$outDir/_staging/batch=$batchId"
         batch.filter(col("order_status") === "completed")
           .groupBy(date_trunc("hour", col("order_timestamp")).as("hour"),
             col("category"))
@@ -407,10 +427,47 @@ object StreamAssembly {
             count(lit(1)).as("partial_count"),
             sum("total_amount").as("partial_revenue"),
             sum("quantity").as("partial_quantity"))
-          .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
+          .write.mode("overwrite").parquet(staged)
+        publishStaged(batch.sparkSession, staged, outDir, batchId)
       }
       .start()
+
+  /** Moves a staged micro-batch's part files to `<outDir>/batch-<id>-<k>
+    * .parquet`, after deleting any `batch-<id>-*` file a prior attempt of
+    * the same batch left, then drops the staging directory.
+    */
+  private def publishStaged(spark: SparkSession, staged: String,
+                            outDir: String, batchId: Long): Unit = {
+    import org.apache.hadoop.fs.Path
+    val stage = new Path(staged)
+    val out = new Path(outDir)
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.globStatus(new Path(out, s"batch-$batchId-*"))
+      .foreach(st => fs.delete(st.getPath, false))
+    fs.listStatus(stage).map(_.getPath)
+      .filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).zipWithIndex
+      .foreach { case (part, k) =>
+        val dst = new Path(out, s"batch-$batchId-$k.parquet")
+        if (!fs.rename(part, dst))
+          throw new java.io.IOException(s"cannot rename $part to $dst")
+      }
+    fs.delete(stage, true)
+  }
+
+  /** The declared schema of [[startHourlyPartialsSink]]'s files: the
+    * reader passes it instead of inferring one, which would launch a
+    * schema job per read.
+    */
+  val PartialsSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("hour", TimestampType),
+      StructField("category", StringType),
+      StructField("partial_count", LongType),
+      StructField("partial_revenue", DoubleType),
+      StructField("partial_quantity", LongType)))
+  }
 
   /** T6 end-to-end: one streaming pass that routes parsed orders to the
     * partitioned raw store and malformed payloads to a dead-letter
@@ -451,9 +508,12 @@ object StreamAssembly {
 
   /** Read side of the partials mirror: fold partial rows into final
     * totals — identical result to the update-mode state path (tested).
+    * Reads [[startHourlyPartialsSink]]'s flat directory with the declared
+    * [[PartialsSchema]]: one driver-side listing of one directory and no
+    * schema job, at any stream age; an empty directory folds to no rows.
     */
   def compactHourlyPartials(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.schema(PartialsSchema).parquet(dir)
       .groupBy("hour", "category")
       .agg(
         sum("partial_count").as("order_count"),
@@ -491,7 +551,7 @@ object StreamAssembly {
     // partitions × batches; 4→2 measured −11% across the streaming tier);
     // the stream is built FROM the drain clone so its per-batch plans see
     // the lowered conf
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -562,7 +622,7 @@ object StreamAssembly {
     // freeze the epoch from the static table: the x projection must be
     // identical in every micro-batch for the partials to be additive
     val t0 = Analytics.linregEpoch(events).localCheckpoint(true)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -631,7 +691,7 @@ object StreamAssembly {
         sum("p").as("sp_hist"))
       .localCheckpoint(true)
     val srcSchema = spark.read.parquet(srcDir).schema
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(srcSchema)
         .option("maxFilesPerTrigger", 1)
@@ -696,7 +756,7 @@ object StreamAssembly {
       events.repartition(nFiles).write.parquet(d)
       d
     })
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -762,7 +822,7 @@ object StreamAssembly {
     // partitions (the count is pinned into the checkpoint at first start;
     // the stream is built FROM the drain clone so the per-batch
     // incremental plans see the lowered conf)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -858,7 +918,7 @@ object StreamAssembly {
       }
       d
     })
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       def drain(arm: CrashArm): Unit = {
         val stream = ds.readStream
           .schema(events.schema)
@@ -944,7 +1004,7 @@ object StreamAssembly {
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stagePurchaseChunksWithSentinel(
       spark, sfDir, nChunks, tolMin, delayMs = 2 * 3600000L)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(purchaseSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1007,7 +1067,7 @@ object StreamAssembly {
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stagePurchaseChunksWithSentinel(
       spark, sfDir, nChunks, tolMin, delayMs = 2 * 3600000L)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(purchaseSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1110,9 +1170,9 @@ object StreamAssembly {
     val outDir = s"$tmp/daily"
     val ckptDir = s"$tmp/ckpt"
     val (dirA, dirB) = stageSplitEventsSentinel(spark, sfDir, nFiles)
-    // a union batch is still one staged file per trigger; either staged
-    // half sizes the per-batch volume (both are event-table slices)
-    withDrainConf(spark, srcDir = dirA) { ds =>
+    // a union batch is still one staged file per trigger, from either
+    // half: the larger of the two halves' staged files sizes it
+    withDrainConf(spark, srcDirs = Seq(dirA, dirB)) { ds =>
       def source(d: String) = ds.readStream
         .schema(enrichEventSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1229,7 +1289,7 @@ object StreamAssembly {
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stagePurchaseChunksWithSentinel(
       spark, sfDir, nChunks, tolMin, delayMs = 2 * 3600000L)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(purchaseSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1304,7 +1364,7 @@ object StreamAssembly {
       events.repartition(nFiles).write.parquet(d)
       d
     })
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1408,7 +1468,7 @@ object StreamAssembly {
     val outDir = s"$tmp/daily"
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stageEventsReplaySentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(replayEventSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1515,7 +1575,7 @@ object StreamAssembly {
     val outDir = s"$tmp/sliding"
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stageUserEventsSentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(enrichEventSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1567,7 +1627,7 @@ object StreamAssembly {
     val outDir = s"$tmp/enriched"
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stageUserEventsSentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val dim = broadcast(graft.Tables.customer(ds, sfDir)
         .select(col("c_custkey"), col("c_mktsegment")))
       val stream = ds.readStream
@@ -1636,7 +1696,7 @@ object StreamAssembly {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     withDrainConf(spark, Map(provKey ->
       ("org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")), srcDir = srcDir) { ds =>
+        "state.RocksDBStateStoreProvider")), srcDirs = Seq(srcDir)) { ds =>
       def drain(arm: CrashArm): Unit = {
         val stream = ds.readStream
           .schema(userEventSchema)
@@ -1739,7 +1799,7 @@ object StreamAssembly {
     val outDir = s"$tmp/sessions"
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stageUserEventsWithSentinel(spark, sfDir, nFiles, gapMinutes)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       def drain(arm: CrashArm): Unit = {
         val stream = ds.readStream
           .schema(userEventSchema)
@@ -1804,7 +1864,7 @@ object StreamAssembly {
     val outDir = s"$tmp/sessions"
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stageUserEventsSentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(enrichEventSchema)
         .option("maxFilesPerTrigger", 1)
@@ -1902,7 +1962,7 @@ object StreamAssembly {
     val outDir = s"$tmp/deduped"
     val ckptDir = s"$tmp/ckpt"
     val srcDir = stageEventsWithReplay(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(replayEventSchema)
         .option("maxFilesPerTrigger", 1)
@@ -2019,7 +2079,7 @@ object StreamAssembly {
     val maxHour = graft.Tables.events(spark, sfDir)
       .agg(date_trunc("hour", max(col("ts").cast("timestamp"))))
       .first().getTimestamp(0)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(replayEventSchema)
         .option("maxFilesPerTrigger", 1)
@@ -2087,7 +2147,7 @@ object StreamAssembly {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       def bandsOf(docs: DataFrame): DataFrame =
         graft.ops.Dedup.bandedSignatures(
@@ -2164,7 +2224,7 @@ object StreamAssembly {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("text",
         org.apache.spark.sql.types.StringType)))
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       def gramsOf(docs: DataFrame): DataFrame =
         docs.withColumn("ws", split(col("text"), " "))
           .filter(size(col("ws")) >= k)
@@ -2256,7 +2316,7 @@ object StreamAssembly {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("n_chars",
         org.apache.spark.sql.types.LongType)))
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       // register the word_ngrams kernel BEFORE the stream starts: each
       // micro-batch runs on a session clone whose function registry is
       // copied at clone time
@@ -2332,7 +2392,7 @@ object StreamAssembly {
       .select(col("doc_id"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val idSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType)))
@@ -2429,7 +2489,7 @@ object StreamAssembly {
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
     val docSchema = docProbeSchema
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       // frozen model from the even-half history, materialized once
       val (idf0, corpus0) = graft.ops.Retrieval.bm25Model(
         graft.Tables.documents(ds, sfDir).filter(col("doc_id") % 2 === 0))
@@ -2490,7 +2550,7 @@ object StreamAssembly {
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
     val docSchema = docProbeSchema
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val stream = ds.readStream
         .schema(docSchema)
         .option("maxFilesPerTrigger", 1)
@@ -2551,7 +2611,7 @@ object StreamAssembly {
       .select(col("vec_id"), col("embedding"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       // one-time static side, shared with the batch recall audit
       val (cents, assigned) =
         graft.ops.Similarity.annProbeIndex(ds, sfDir, nCells)
@@ -2619,7 +2679,7 @@ object StreamAssembly {
     val idx = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val idxS = idx.select(col("vec_id"), col("embedding"),
         Similarity.dot(col("embedding"), col("embedding")).as("sq"))
@@ -2711,7 +2771,7 @@ object StreamAssembly {
     val idx = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val idxS = idx.select(col("vec_id"), col("embedding"),
         Similarity.dot(col("embedding"), col("embedding")).as("sq"))
@@ -2867,7 +2927,7 @@ object StreamAssembly {
     val (centsS, cbS, codesD) = Similarity.ivfpqProbeModel(spark, sfDir)
     val codes = codesD
       .select(col("vec_id").as("m_id"), col("cell"), col("s"), col("cid"))
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val embSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id",
@@ -2957,7 +3017,7 @@ object StreamAssembly {
     // frozen model, built/reused on the outer session (context-keyed
     // memo — shared with the probe drain and the batch consumers)
     val (centsS, cbS, _) = Similarity.ivfpqProbeModel(spark, sfDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val embSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id",
@@ -3068,7 +3128,7 @@ object StreamAssembly {
       .select(col("vec_id"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val idSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id",
           org.apache.spark.sql.types.LongType)))
@@ -3348,7 +3408,7 @@ object StreamAssembly {
       .select(col("vec_id"), col("embedding"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val embSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id",
@@ -3573,7 +3633,7 @@ object StreamAssembly {
       .select(col("doc_id"), col("text"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       import ds.implicits._
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -3644,7 +3704,7 @@ object StreamAssembly {
       .select(col("doc_id"), col("text"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -3732,7 +3792,7 @@ object StreamAssembly {
       .select(col("doc_id"), col("source"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -3804,7 +3864,7 @@ object StreamAssembly {
       .write.mode("overwrite").parquet(srcDir)
     // frozen filter, built/reused on the outer session
     val positions = TrainingSets.bloomModel(spark, sfDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -3874,7 +3934,7 @@ object StreamAssembly {
     // memo — retraining inside the drain was the r13 stream_pq_probe
     // regression; same fix applied from the start here)
     val model = TrainingSets.nbModel(spark, sfDir, "even")
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -3940,7 +4000,7 @@ object StreamAssembly {
     // frozen model, built/reused on the outer session (context-keyed
     // memo — the streamNbProbe discipline)
     val model = Similarity.centroidModel(spark, sfDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val embSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id",
@@ -4015,7 +4075,7 @@ object StreamAssembly {
       .select(md5(col("text")).as("h")).distinct()
       .localCheckpoint(true)
     val model = TrainingSets.nbModel(spark, sfDir, "even")
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       graft.functions.GraftFunctions.register(ds)
       val docSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -4086,7 +4146,7 @@ object StreamAssembly {
       .select(col("doc_id"))
       .repartition(nFiles)
       .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDir = srcDir) { ds =>
+    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
       val idSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType)))

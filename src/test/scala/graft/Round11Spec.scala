@@ -64,9 +64,9 @@ class Round11Spec extends SparkSpec {
       spark.sparkContext.addSparkListener(l)
       try {
         body
-        // listener events are async; wait for the count to stabilize
-        var last = -1
-        while (n.get() != last) { last = n.get(); Thread.sleep(300) }
+        // listener events are async; wait until the bus has delivered
+        // every event posted so far
+        org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
       } finally spark.sparkContext.removeSparkListener(l)
       n.get()
     }

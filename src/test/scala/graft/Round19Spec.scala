@@ -84,10 +84,9 @@ class Round19Spec extends SparkSpec {
       jobs.set(0)
       val beam = KnnGraph.greedySearch(qs, idx, edges)
       beam.write.format("noop").mode("overwrite").save()
-      // listener events are async; wait for the count to stabilize
-      // (the Round11Spec idiom)
-      var last = -1
-      while (jobs.get() != last) { last = jobs.get(); Thread.sleep(300) }
+      // listener events are async; wait until the bus has delivered
+      // every event posted so far
+      org.apache.spark.ListenerBusBridge.drain(spark.sparkContext)
       val n = jobs.get()
       // r18 (per-hop repartition): ~19 jobs; r19 (shared clustering):
       // 13 measured (broadcast materializations + hop-1's two

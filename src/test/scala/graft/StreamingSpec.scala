@@ -190,12 +190,62 @@ class StreamingSpec extends SparkSpec {
       val partials = spark.read.parquet(outDir)
       assert(partials.count() >
         partials.select("hour", "category").distinct().count())
+      // the reader's declared schema is the schema the writer produces,
+      // and publishing leaves nothing staged behind
+      assert(partials.schema === StreamAssembly.PartialsSchema)
+      assert(Option(new java.io.File(outDir, "_staging").listFiles())
+        .forall(_.isEmpty))
       val got = StreamAssembly.compactHourlyPartials(spark, outDir)
         .withColumn("total_revenue", round(col("total_revenue"), 2))
       val want = batchHourly(600)
       assert(got.count() === want.count())
       assert(got.exceptAll(want).count() === 0)
     } finally q.stop()
+    // a sink that has committed nothing yet folds to no rows
+    val empty = Files.createTempDirectory("partials_empty").toString
+    assert(StreamAssembly.compactHourlyPartials(spark, empty).count() === 0)
+  }
+
+  test("partials sink replay after a lost commit replaces the batch's " +
+       "files instead of duplicating them") {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[String]
+    val outDir = Files.createTempDirectory("partials_replay").toString
+    val ckDir = Files.createTempDirectory("ck_replay").toString
+    def start() = StreamAssembly.startHourlyPartialsSink(
+      StreamAssembly.ingest(stream.toDF()), outDir, ckDir)
+    val q = start()
+    try jsonBatches(600, 3).foreach { b =>
+      stream.addData(b)
+      q.processAllAvailable()
+    } finally q.stop()
+    // the crash window: the sink holds the newest batch's partials, the
+    // commit log does not, so a restart must run that batch again
+    val commits = new java.io.File(ckDir, "commits")
+    val newest = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    assert(newest === 2L)
+    assert(new java.io.File(commits, s"$newest").delete())
+    new java.io.File(commits, s".$newest.crc").delete()
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      assert(q2.recentProgress.exists(_.batchId == newest),
+        "the restart did not replay the uncommitted batch")
+    } finally q2.stop()
+    val got = StreamAssembly.compactHourlyPartials(spark, outDir)
+      .withColumn("total_revenue", round(col("total_revenue"), 2))
+    val want = batchHourly(600)
+    assert(got.count() === want.count())
+    assert(got.exceptAll(want).count() === 0)
+    // one batch-<id>-<k> set per batch id: k runs 0..n-1 without gaps
+    val Part = """batch-(\d+)-(\d+)\.parquet""".r
+    val sets = new java.io.File(outDir).list().toSeq.collect {
+      case Part(id, k) => (id.toLong, k.toInt)
+    }.groupBy(_._1).map { case (id, ks) => id -> ks.map(_._2).sorted }
+    assert(sets.keySet === Set(0L, 1L, 2L))
+    sets.foreach { case (id, ks) =>
+      assert(ks === ks.indices, s"batch $id has files $ks")
+    }
   }
 
   test("late rows fold into their original hour (no-watermark mode)") {
