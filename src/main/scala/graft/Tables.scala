@@ -23,14 +23,10 @@ object Tables {
   private def listingSignature(spark: SparkSession,
                                path: String): Seq[(String, Long, Long)] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    val files = p.getFileSystem(spark.sessionState.newHadoopConf())
-      .listFiles(p, true)
-    val sig = Seq.newBuilder[(String, Long, Long)]
-    while (files.hasNext) {
-      val f = files.next()
-      sig += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    sig.result().sorted
+    graft.storage.Storage.leafFiles(
+      p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sorted
   }
 
   /** Reads `<sfDir>/<name>.parquet` with its schema resolved once per

@@ -3,7 +3,7 @@ package graft.storage
 import java.time.{Instant, LocalDate, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -48,6 +48,17 @@ object Storage {
       .mode("append")
       .partitionBy("month")
       .parquet(path)
+
+  /** Every file under `p`, or `p` itself when it is a file, walked with
+    * `listStatus`. Unlike `listFiles` it loads no permissions, which the
+    * local file system reads by running `ls` once per file.
+    */
+  def leafFiles(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq(st)
+    walk(fs.getFileStatus(p))
+  }
 
   /** Read the raw table; `month` comes back as a partition column usable in
     * pruning predicates.

@@ -252,6 +252,11 @@ object StreamAssembly {
     * `GRAFT_DRAIN_PARTITIONS` overrides the derivation outright
     * (r18's knob, must be > 0); `GRAFT_DRAIN_TARGET_BATCH_BYTES`
     * tunes the per-partition volume target.
+    *
+    * The target is ON-DISK bytes: staged files are compressed parquet, so
+    * one partition's in-memory micro-batch is the target times the
+    * staged data's compression ratio. Set the target to the on-disk size
+    * of the batch one state partition should take.
     */
   private val DrainPartitionsEnv: Option[Int] =
     sys.env.get("GRAFT_DRAIN_PARTITIONS").map(r =>
@@ -266,14 +271,18 @@ object StreamAssembly {
     */
   @volatile private[graft] var drainPartitionsForTest: Option[Int] = None
 
-  private[graft] def maxStagedFileBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .map(walk).foldLeft(0L)(math.max)
-      else if (f.getName.endsWith(".parquet")) f.length
-      else 0L
-    walk(new java.io.File(dir))
+  /** The largest `.parquet` file under `dir` (0 when `dir` does not
+    * exist), walked through Hadoop so it sizes a staged source on any
+    * file system.
+    */
+  private[graft] def maxStagedFileBytes(spark: SparkSession,
+                                        dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    try graft.storage.Storage.leafFiles(
+        p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(_.getLen).foldLeft(0L)(math.max)
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   /** Sized from the largest staged file across `srcDirs` (a drain that
@@ -287,8 +296,8 @@ object StreamAssembly {
       if (dirs.isEmpty) 1
       else math.max(1L, math.min(
         spark.sparkContext.defaultParallelism.toLong,
-        (dirs.map(maxStagedFileBytes).max + DrainTargetBatchBytes - 1) /
-          DrainTargetBatchBytes)).toInt
+        (dirs.map(maxStagedFileBytes(spark, _)).max +
+          DrainTargetBatchBytes - 1) / DrainTargetBatchBytes)).toInt
     }
 
   private def withDrainConf[T](spark: SparkSession,
