@@ -1695,8 +1695,8 @@ object Similarity {
     * two-stage training DAG per consumer (which multiplied the plan's
     * exchange count ~10×). Keyed on the CONTEXT, not the session:
     * localCheckpoint blocks live in the shared SparkContext, so the
-    * cloned per-drain sessions ([[graft.streaming.StreamAssembly]]'s
-    * withDrainConf) reuse the model instead of retraining it per drain
+    * cloned per-drain sessions ([[graft.streaming.Drain.run]]'s
+    * clone) reuse the model instead of retraining it per drain
     * (the r13 2× stream_pq_probe regression) and no dead session keys
     * accumulate. Registered with [[Memo]] so the bench's clearAll
     * keeps cold timings honest.

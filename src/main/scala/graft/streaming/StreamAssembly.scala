@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -222,161 +222,6 @@ object StreamAssembly {
     */
   val defaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
 
-  /** Runs a drain on a CLONED session (`newSession()`: shared
-    * SparkContext/caches, ISOLATED SQLConf) with the drain-scoped confs —
-    * lowered shuffle partitions, plus `extra` (e.g. the RocksDB
-    * state-store provider). Because the clone owns its conf, the mutation
-    * is invisible to every other thread — batch queries planned
-    * concurrently on the original session never see partitions=2 (the
-    * previous save/restore-under-lock serialized drains against each
-    * other but still leaked the lowered conf to concurrent BATCH plans on
-    * other threads; a clone closes that hole) — and nothing needs
-    * restoring. The body must build its streaming frames FROM the clone
-    * so the per-micro-batch incremental plans read the drain confs.
-    */
-  /** Streaming-state parallelism for the drains — SCALE-AWARE (r18
-    * verdict item 5): state-store instances (and their per-micro-batch
-    * commits) scale with shuffle partitions × stateful-operator sides,
-    * so the partition count must track per-batch VOLUME, never the
-    * host's core count. Every drain here reads a staged file source
-    * with `maxFilesPerTrigger = 1` — one micro-batch = one staged
-    * file — so the honest sizing input is the largest staged file:
-    * one state partition per [[DrainTargetBatchBytes]] of micro-batch
-    * input (the guide §2.1/§2.2 partition-sizing guidance applied to
-    * streaming state), floor 1, capped at the session's default
-    * parallelism. At fixture scale every staged file is a few KB, so
-    * the derived value is 1 — identical to r18's constant, and the
-    * results are partition-count invariant (pinned by the
-    * drain-partitions spec) — while a redeploy against real volumes
-    * scales state parallelism with the data without touching code.
-    * `GRAFT_DRAIN_PARTITIONS` overrides the derivation outright
-    * (r18's knob, must be > 0); `GRAFT_DRAIN_TARGET_BATCH_BYTES`
-    * tunes the per-partition volume target.
-    *
-    * The target is ON-DISK bytes: staged files are compressed parquet, so
-    * one partition's in-memory micro-batch is the target times the
-    * staged data's compression ratio. Set the target to the on-disk size
-    * of the batch one state partition should take.
-    */
-  private val DrainPartitionsEnv: Option[Int] =
-    sys.env.get("GRAFT_DRAIN_PARTITIONS").map(r =>
-      graft.EnvKnobs.parsePosInt("GRAFT_DRAIN_PARTITIONS", Some(r), 1))
-
-  private[graft] val DrainTargetBatchBytes: Long =
-    graft.EnvKnobs.posLong("GRAFT_DRAIN_TARGET_BATCH_BYTES", 64L << 20)
-
-  /** Spec hook: lets the partition-invariance spec drive the same drain
-    * at several state-partition counts inside one JVM (env knobs are
-    * frozen at object init).
-    */
-  @volatile private[graft] var drainPartitionsForTest: Option[Int] = None
-
-  /** The largest `.parquet` file under `dir` (0 when `dir` does not
-    * exist), walked through Hadoop so it sizes a staged source on any
-    * file system.
-    */
-  private[graft] def maxStagedFileBytes(spark: SparkSession,
-                                        dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    try graft.storage.Storage.leafFiles(
-        p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen).foldLeft(0L)(math.max)
-    catch { case _: java.io.FileNotFoundException => 0L }
-  }
-
-  /** Sized from the largest staged file across `srcDirs` (a drain that
-    * streams several staged sources takes each trigger's file from any
-    * of them); no known source dir derives 1.
-    */
-  private[graft] def drainPartitionsFor(spark: SparkSession,
-                                        srcDirs: String*): Int =
-    drainPartitionsForTest.orElse(DrainPartitionsEnv).getOrElse {
-      val dirs = srcDirs.filter(_ != null)
-      if (dirs.isEmpty) 1
-      else math.max(1L, math.min(
-        spark.sparkContext.defaultParallelism.toLong,
-        (dirs.map(maxStagedFileBytes(spark, _)).max +
-          DrainTargetBatchBytes - 1) / DrainTargetBatchBytes)).toInt
-    }
-
-  private def withDrainConf[T](spark: SparkSession,
-                               extra: Map[String, String] = Map.empty,
-                               srcDirs: Seq[String] = Nil)
-                              (body: SparkSession => T): T = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      drainPartitionsFor(spark, srcDirs: _*).toString)
-    extra.foreach { case (k, v) => s.conf.set(k, v) }
-    body(s)
-  }
-
-  /** Injected mid-drain crash for the checkpoint-recovery gates: armed
-    * once, [[maybeCrash]] throws from foreachBatch AFTER the micro-batch's
-    * sink write but BEFORE its checkpoint commit — the harshest failure
-    * window (the sink holds the batch's output, the commit log doesn't
-    * know). A restart from the same checkpoint must replay that batch;
-    * exactly-once then rests on the per-batch `batch=<id>` overwrite
-    * layout replacing, not duplicating, the replayed output.
-    */
-  private[graft] final class CrashArm(afterBatches: Int) {
-    private val armed =
-      new java.util.concurrent.atomic.AtomicBoolean(afterBatches > 0)
-    def maybeCrash(batchId: Long): Unit =
-      if (batchId + 1 >= afterBatches && armed.compareAndSet(true, false))
-        throw new RuntimeException(
-          s"graft injected crash after batch $batchId sink write")
-    /** True once the injected crash has fired — [[runWithInjectedCrash]]
-      * asserts this after the first drain attempt, so a gate whose
-      * crash point exceeds the actual micro-batch count (a larger
-      * `crashAfterBatches`, a shrunken source) fails LOUDLY instead of
-      * silently degrading into a plain re-drain that recovers nothing.
-      */
-    def fired: Boolean = afterBatches > 0 && !armed.get
-  }
-
-  /** Run `drain` with an injected crash after `crashAfterBatches`
-    * micro-batches (0 = no fault): the first attempt dies with the
-    * injected failure, the second resumes from the SAME checkpoint and
-    * state store and must drain to the batch-identical result. The
-    * recovery contract of the reference's consumer loop
-    * (`consumers/kafka_to_clickhouse.py:127-129` restarts polling after
-    * an error, at-least-once) upgraded to exactly-once.
-    */
-  private def runWithInjectedCrash(drain: CrashArm => Unit,
-                                   crashAfterBatches: Int): Unit = {
-    val arm = new CrashArm(crashAfterBatches)
-    if (crashAfterBatches > 0) {
-      // bounded cause walk (no recursion): a cycle in an exotic
-      // exception chain must not stack-overflow inside the handler and
-      // mask the original failure
-      def injected(t0: Throwable): Boolean = {
-        var t = t0
-        var depth = 0
-        while (t != null && depth < 20) {
-          if (Option(t.getMessage).exists(_.contains("graft injected crash")))
-            return true
-          t = t.getCause
-          depth += 1
-        }
-        false
-      }
-      try drain(arm)
-      catch {
-        case e: org.apache.spark.sql.streaming.StreamingQueryException
-          if injected(e) => ()
-      }
-      // the recovery gate only tests recovery if the crash actually
-      // happened — a clean first drain means the fault point was never
-      // reached and the "resumed" run below would prove nothing
-      require(arm.fired,
-        s"injected crash after $crashAfterBatches batches never fired " +
-          "(fewer micro-batches than the crash point?)")
-    }
-    drain(arm)
-  }
-
-
   /** Raw-table sink (S5 analogue): append micro-batches as yyyyMM-
     * partitioned parquet — the engine's MergeTree. Exactly-once:
     * checkpoint + deterministic file commit protocol.
@@ -541,52 +386,15 @@ object StreamAssembly {
     */
   def streamPartialsHourly(spark: SparkSession, sfDir: String,
                            nFiles: Int = 4): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_stream_partials").toString
-    val partialsDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val events = graft.Tables.events(spark, sfDir)
-    // the N-file re-stage of the events table is fixture SCAFFOLDING (in a
-    // deployment the source already exists) — memoized per (session, dir,
-    // N) so repeated invocations time the streaming path itself; the
-    // stream, its checkpoint, and the partials sink run fresh every call
-    val srcDir = stagedSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val d = s"$tmp/src"
-      events.repartition(nFiles).write.parquet(d)
-      d
-    })
-    // few-hundred-row per-batch aggregates don't need 32 reducers: run the
-    // micro-batch jobs on 2 shuffle partitions (state-store commit cost ∝
-    // partitions × batches; 4→2 measured −11% across the streaming tier);
-    // the stream is built FROM the drain clone so its per-batch plans see
-    // the lowered conf
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.filter(col("event_type") === "purchase")
-            .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
-            .agg(
-              count(lit(1)).as("pc"),
-              sum(col("value").cast("decimal(18,6)")).as("pv"))
-            // partials are a few hundred rows/batch: one output file per
-            // micro-batch, not one per shuffle partition — and each batch
-            // lands in its OWN batch=<id> dir with overwrite, so a
-            // micro-batch retried after a sink write but before the
-            // checkpoint commit REPLACES its partial rows instead of
-            // double-appending them (the streamPqIndexAppend layout)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$partialsDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = stagedEvents(spark, sfDir, nFiles)
+    val partialsDir = Drain.run(spark, "graft_stream_partials", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)) {
+        _.filter(col("event_type") === "purchase")
+          .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
+          .agg(
+            count(lit(1)).as("pc"),
+            sum(col("value").cast("decimal(18,6)")).as("pv"))
+      }
     }
     spark.read.parquet(partialsDir)
       .groupBy("hour", "event_type")
@@ -596,9 +404,62 @@ object StreamAssembly {
       .orderBy("hour", "event_type")
   }
 
-  private val stagedSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), String]
+  /** The events table staged as `nFiles` files: the source shared by the
+    * partials, trend, A/B, self-join and upsert drains.
+    */
+  private def stagedEvents(spark: SparkSession, sfDir: String,
+                           nFiles: Int): Drain.Staged =
+    Drain.stageWaves(spark, "events", sfDir, nFiles)(
+      Seq(graft.Tables.events(spark, sfDir).repartition(nFiles)))
+
+  /** The events table's columns `names`, typed as the staged sources
+    * store them.
+    */
+  private def eventCols(spark: SparkSession, sfDir: String,
+                        names: String*): DataFrame = {
+    val types = Map("event_id" -> "long", "user_id" -> "long",
+      "ts" -> "timestamp", "event_type" -> "string", "value" -> "double")
+    graft.Tables.events(spark, sfDir)
+      .select(names.map(c => col(c).cast(types(c)).as(c)): _*)
+  }
+
+  /** One far-future SENTINEL row in `events`' columns (ids −1, type
+    * "sentinel", value 0) at 41 days plus `pastMs` after the newest
+    * event: staged as the newest wave, its event time pushes a 40-day
+    * watermark past every real window. One driver-side max action.
+    */
+  private def sentinelRow(events: DataFrame, pastMs: Long = 0L): DataFrame = {
+    val maxTs = events.agg(max("ts")).first().getTimestamp(0)
+    val at = Map[String, Column]("event_id" -> lit(-1L),
+      "user_id" -> lit(-1L), "event_type" -> lit("sentinel"),
+      "value" -> lit(0.0), "ts" -> lit(new java.sql.Timestamp(
+        maxTs.getTime + 41L * 86400000L + pastMs)))
+    events.sparkSession.range(1)
+      .select(events.columns.toSeq.map(c => at(c).as(c)): _*).coalesce(1)
+  }
+
+  /** `frame` cut into `n` contiguous ts ranges, one file each, oldest
+    * first, and its newest ts in ms. One driver-side min/max action.
+    */
+  private def timeChunks(frame: DataFrame,
+                         n: Int): (Seq[DataFrame], Long) = {
+    val mm = frame.agg(min("ts"), max("ts")).first()
+    val (t0, t1) = (mm.getTimestamp(0).getTime, mm.getTimestamp(1).getTime)
+    val step = (t1 - t0) / n + 1
+    def at(i: Int) = lit(new java.sql.Timestamp(t0 + i.toLong * step))
+    ((0 until n).map(i =>
+      frame.filter(col("ts") >= at(i) && col("ts") < at(i + 1)).coalesce(1)),
+      t1)
+  }
+
+  /** `table` rows matching `keep`, projected to `cols` and staged afresh
+    * as `nFiles` files: the incoming half of a probe drain.
+    */
+  private def stageIncoming(spark: SparkSession, table: DataFrame,
+                            keep: Column, nFiles: Int,
+                            cols: String*): Drain.Staged =
+    Drain.stage(spark, "incoming",
+      table.filter(keep).select(cols.map(col): _*).repartition(nFiles))
 
   /** Streaming OLS — regression state as ADDITIVE partials (the
     * [[streamPartialsHourly]] family applied to
@@ -617,39 +478,14 @@ object StreamAssembly {
     */
   def streamTrendPartials(spark: SparkSession, sfDir: String,
                           nFiles: Int = 4): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Analytics
-    val tmp = Files.createTempDirectory("graft_stream_trend").toString
-    val partialsDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val events = graft.Tables.events(spark, sfDir)
-    val srcDir = stagedSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val d = s"$tmp/src"
-      events.repartition(nFiles).write.parquet(d)
-      d
-    })
+    val src = stagedEvents(spark, sfDir, nFiles)
     // freeze the epoch from the static table: the x projection must be
     // identical in every micro-batch for the partials to be additive
-    val t0 = Analytics.linregEpoch(events).localCheckpoint(true)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // idempotent per-batch segment: a retried batch replaces,
-          // never duplicates, its sufficient statistics
-          Analytics.linregPartials(batch, t0)
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$partialsDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val t0 = Analytics.linregEpoch(graft.Tables.events(spark, sfDir))
+      .localCheckpoint(true)
+    val partialsDir = Drain.run(spark, "graft_stream_trend", Seq(src)) { d =>
+      d.foreachBatch(d.open(src))(Analytics.linregPartials(_, t0))
     }
     val folded = spark.read.parquet(partialsDir)
       .groupBy("event_type")
@@ -677,17 +513,10 @@ object StreamAssembly {
     */
   def streamPcaDrift(spark: SparkSession, sfDir: String,
                      nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Similarity
-    val tmp = Files.createTempDirectory("graft_pca_drift").toString
-    val partialsDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
     val emb = graft.Tables.embeddings(spark, sfDir)
-    val srcDir = s"$tmp/incoming"
-    emb.filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"), col("embedding"), col("label"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, emb, col("vec_id") % 2 === 1, nFiles,
+      "vec_id", "embedding", "label")
     // model + history stats on the OUTER session before the drain (the
     // stream_pq_probe lesson): the memoized component is shared with
     // any batch consumer and never retrained inside a micro-batch
@@ -699,30 +528,14 @@ object StreamAssembly {
       .agg(count(lit(1)).cast("decimal(38,0)").as("n_hist"),
         sum("p").as("sp_hist"))
       .localCheckpoint(true)
-    val srcSchema = spark.read.parquet(srcDir).schema
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(srcSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // idempotent per-batch segment: a retried batch replaces,
-          // never duplicates, its sufficient statistics
-          Similarity.pcaProject(batch.select(col("embedding"),
-              col("label")), model)
-            .groupBy("label")
-            .agg(count(lit(1)).cast("decimal(38,0)").as("n_in"),
-              sum("p").as("sp_in"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$partialsDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val partialsDir = Drain.run(spark, "graft_pca_drift", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)) { batch =>
+        Similarity.pcaProject(batch.select(col("embedding"),
+            col("label")), model)
+          .groupBy("label")
+          .agg(count(lit(1)).cast("decimal(38,0)").as("n_in"),
+            sum("p").as("sp_in"))
+      }
     }
     def meanExpr(sp: String, n: String): String =
       s"""CASE WHEN $sp >= 0 THEN CAST($sp DIV $n AS BIGINT)
@@ -754,41 +567,16 @@ object StreamAssembly {
     */
   def streamAbMonitor(spark: SparkSession, sfDir: String,
                       nFiles: Int = 4): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Analytics
-    val tmp = Files.createTempDirectory("graft_stream_ab").toString
-    val partialsDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val events = graft.Tables.events(spark, sfDir)
-    val srcDir = stagedSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val d = s"$tmp/src"
-      events.repartition(nFiles).write.parquet(d)
-      d
-    })
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // idempotent per-batch segment: a retried batch replaces,
-          // never duplicates, its sufficient statistics
-          batch
-            .select(pmod(col("user_id"), lit(2)).cast("int").as("arm"),
-              expr("CAST(FLOOR(value * 100) AS DECIMAL(38,0))").as("yc"))
-            .groupBy("arm")
-            .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
-              sum("yc").as("s"), sum(expr("yc * yc")).as("q"))
-            .coalesce(1)
-            .write.mode("overwrite").parquet(s"$partialsDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = stagedEvents(spark, sfDir, nFiles)
+    val partialsDir = Drain.run(spark, "graft_stream_ab", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)) {
+        _.select(pmod(col("user_id"), lit(2)).cast("int").as("arm"),
+            expr("CAST(FLOOR(value * 100) AS DECIMAL(38,0))").as("yc"))
+          .groupBy("arm")
+          .agg(count(lit(1)).cast("decimal(38,0)").as("n"),
+            sum("yc").as("s"), sum(expr("yc * yc")).as("q"))
+      }
     }
     Analytics.welchSolve(spark.read.parquet(partialsDir)
       .groupBy("arm")
@@ -814,56 +602,24 @@ object StreamAssembly {
     */
   def streamJoinFollowups(spark: SparkSession, sfDir: String,
                           nFiles: Int = 4, tolMin: Int = 30): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_stream_join").toString
-    val pairsDir = s"$tmp/pairs"
-    val ckptDir = s"$tmp/ckpt"
-    val events = graft.Tables.events(spark, sfDir)
-    val srcDir = stagedSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val d = s"$tmp/src"
-      events.repartition(nFiles).write.parquet(d)
-      d
-    })
-    // per-key join state is a handful of purchase rows, but the HDFS-backed
-    // state store pays a per-instance commit every micro-batch and
-    // instances = shuffle partitions × join sides: a micro-batch-commit
-    // cost, not a data cost, so run the streaming query itself on few
-    // partitions (the count is pinned into the checkpoint at first start;
-    // the stream is built FROM the drain clone so the per-batch
-    // incremental plans see the lowered conf)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-        // followup-PURCHASE pairs: the filter is pushed below the join, so
-        // both state stores hold purchase rows only — at any scale the
-        // dominant cost of a stream-stream join is state-store churn, and
-        // pre-join filtering is the single biggest lever on it
-        .filter(col("event_type") === "purchase")
+    val src = stagedEvents(spark, sfDir, nFiles)
+    val pairsDir = Drain.run(spark, "graft_stream_join", Seq(src)) { d =>
+      // followup-PURCHASE pairs: the filter is pushed below the join, so
+      // both state stores hold purchase rows only — at any scale the
+      // dominant cost of a stream-stream join is state-store churn, and
+      // pre-join filtering is the single biggest lever on it
+      val stream = d.open(src).filter(col("event_type") === "purchase")
       val a = stream.select(col("event_id").as("event_a"),
         col("user_id").as("user_a"), col("ts").as("ts_a"),
         col("event_type").as("type_a"))
       val b = stream.select(col("event_id").as("event_b"),
         col("user_id").as("user_b"), col("ts").as("ts_b"),
         col("event_type").as("type_b"))
-      val joined = a.join(b,
+      d.foreachBatch(a.join(b,
         col("user_a") === col("user_b") &&
           col("ts_b") > col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES"))
-      val query = joined.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // a micro-batch's new pairs are few thousand rows: one file per
-          // batch, not one per shuffle partition
-          batch.select("type_a", "type_b", "user_a")
-            .coalesce(1).write.mode("append").parquet(pairsDir)
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES")))(
+        _.select("type_a", "type_b", "user_a"))
     }
     spark.read.parquet(pairsDir)
       .groupBy("type_a", "type_b")
@@ -898,71 +654,27 @@ object StreamAssembly {
                                      nChunks: Int = 4, tolMin: Int = 30,
                                      delay: String = "2 hours",
                                      crashAfterBatches: Int = 0): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_wm_join").toString
-    val pairsDir = s"$tmp/pairs"
-    val ckptDir = s"$tmp/ckpt"
-    val events = graft.Tables.events(spark, sfDir)
-    // fixture SCAFFOLDING (memoized): time-range chunk files written
-    // SEQUENTIALLY with increasing mtimes — the one driver-side action
-    // (min/max ts) sizes the chunk ranges, once per (session, dir, N)
-    val srcDir = wmJoinSrcCache.getOrElseUpdate((spark, sfDir, nChunks), {
-      val d = s"$tmp/src"
-      val mm = events.agg(min("ts"), max("ts")).first()
-      val (t0, t1) = (mm.getTimestamp(0).getTime, mm.getTimestamp(1).getTime)
-      val step = (t1 - t0) / nChunks + 1
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      var seen = Set.empty[String]
-      var stamp = System.currentTimeMillis()
-      (0 until nChunks).foreach { i =>
-        val lo = new java.sql.Timestamp(t0 + i.toLong * step)
-        val hi = new java.sql.Timestamp(t0 + (i + 1).toLong * step)
-        events.filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
-          .coalesce(1).write.mode("append").parquet(d)
-        stamp += 60000L
-        parts().filterNot(f => seen(f.getPath)).foreach { f =>
-          f.setLastModified(stamp); seen += f.getPath
-        }
-      }
-      d
-    })
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(events.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-          // filter below the join: both state stores hold purchase rows only
-          .filter(col("event_type") === "purchase")
-        val a = stream.select(col("event_id").as("event_a"),
-            col("user_id").as("user_a"), col("ts").as("ts_a"),
-            col("event_type").as("type_a"))
-          .withWatermark("ts_a", delay)
-        val b = stream.select(col("event_id").as("event_b"),
-            col("user_id").as("user_b"), col("ts").as("ts_b"),
-            col("event_type").as("type_b"))
-          .withWatermark("ts_b", delay)
-        val joined = a.join(b,
-          col("user_a") === col("user_b") &&
-            col("ts_b") > col("ts_a") &&
-            col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES"))
-        val query = joined.writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // idempotent per-batch segment (replayed batch replaces)
-            batch.select("type_a", "type_b", "user_a")
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$pairsDir/batch=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
-      }
-      runWithInjectedCrash(drain, crashAfterBatches)
+    // fixture SCAFFOLDING (memoized): time-range chunk files staged oldest
+    // first — the one driver-side action (min/max ts) sizes the ranges
+    val src = Drain.stageWaves(spark, "event_chunks", sfDir, nChunks)(
+      timeChunks(graft.Tables.events(spark, sfDir), nChunks)._1)
+    val pairsDir = Drain.run(spark, "graft_wm_join", Seq(src),
+        crashAfterBatches = crashAfterBatches) { d =>
+      // filter below the join: both state stores hold purchase rows only
+      val stream = d.open(src).filter(col("event_type") === "purchase")
+      val a = stream.select(col("event_id").as("event_a"),
+          col("user_id").as("user_a"), col("ts").as("ts_a"),
+          col("event_type").as("type_a"))
+        .withWatermark("ts_a", delay)
+      val b = stream.select(col("event_id").as("event_b"),
+          col("user_id").as("user_b"), col("ts").as("ts_b"),
+          col("event_type").as("type_b"))
+        .withWatermark("ts_b", delay)
+      d.foreachBatch(a.join(b,
+        col("user_a") === col("user_b") &&
+          col("ts_b") > col("ts_a") &&
+          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES")))(
+        _.select("type_a", "type_b", "user_a"))
     }
     spark.read.parquet(pairsDir)
       // bucketed accounting (16 user buckets) so the oracle pins pair
@@ -973,10 +685,6 @@ object StreamAssembly {
         countDistinct("user_a").as("n_users"))
       .orderBy("type_a", "type_b", "user_bucket")
   }
-
-  private val wmJoinSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), String]
 
   /** Followup-pair tolerance (minutes) shared by the stream-stream join
     * queries; interpolated into the left-outer oracle SQL so operator and
@@ -1007,41 +715,11 @@ object StreamAssembly {
   def streamJoinLeftOuter(spark: SparkSession, sfDir: String,
                           nChunks: Int = 4, tolMin: Int = JoinTolMin,
                           delay: String = "2 hours"): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_lo_join").toString
-    val pairsDir = s"$tmp/pairs"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stagePurchaseChunksWithSentinel(
+    val src = stagePurchaseChunksWithSentinel(
       spark, sfDir, nChunks, tolMin, delayMs = 2 * 3600000L)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(purchaseSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val a = stream.select(col("event_id").as("event_a"),
-          col("user_id").as("user_a"), col("ts").as("ts_a"))
-        .withWatermark("ts_a", delay)
-      val b = stream.select(col("event_id").as("event_b"),
-          col("user_id").as("user_b"), col("ts").as("ts_b"))
-        .withWatermark("ts_b", delay)
-      val joined = a.join(b,
-        col("user_a") === col("user_b") &&
-          col("ts_b") > col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES"),
-        "leftOuter")
-      val query = joined.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // idempotent per-batch commit (crash-replay overwrites itself)
-          batch.select("user_a", "event_a", "event_b")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$pairsDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val pairsDir = Drain.run(spark, "graft_lo_join", Seq(src)) { d =>
+      d.foreachBatch(purchaseFollowups(d.open(src), delay, tolMin,
+        "leftOuter"))(_.select("user_a", "event_a", "event_b"))
     }
     spark.read.parquet(pairsDir)
       .filter(col("user_a") >= 0)
@@ -1051,6 +729,25 @@ object StreamAssembly {
         sum(when(col("event_b").isNull, 1L).otherwise(0L)).as("n_unmatched"),
         countDistinct("user_a").as("n_users"))
       .orderBy("user_bucket")
+  }
+
+  /** The watermarked purchase self-join of the left-outer, left-semi and
+    * full-outer drains: a later purchase by the same user within `tolMin`
+    * minutes, joined `how`.
+    */
+  private def purchaseFollowups(stream: DataFrame, delay: String,
+                                tolMin: Int, how: String): DataFrame = {
+    val a = stream.select(col("event_id").as("event_a"),
+        col("user_id").as("user_a"), col("ts").as("ts_a"))
+      .withWatermark("ts_a", delay)
+    val b = stream.select(col("event_id").as("event_b"),
+        col("user_id").as("user_b"), col("ts").as("ts_b"))
+      .withWatermark("ts_b", delay)
+    a.join(b,
+      col("user_a") === col("user_b") &&
+        col("ts_b") > col("ts_a") &&
+        col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES"),
+      how)
   }
 
   /** The stream-stream LEFT SEMI join exercised end-to-end — the
@@ -1070,40 +767,11 @@ object StreamAssembly {
   def streamJoinLeftSemi(spark: SparkSession, sfDir: String,
                          nChunks: Int = 4, tolMin: Int = JoinTolMin,
                          delay: String = "2 hours"): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_semi_join").toString
-    val keptDir = s"$tmp/kept"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stagePurchaseChunksWithSentinel(
+    val src = stagePurchaseChunksWithSentinel(
       spark, sfDir, nChunks, tolMin, delayMs = 2 * 3600000L)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(purchaseSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val a = stream.select(col("event_id").as("event_a"),
-          col("user_id").as("user_a"), col("ts").as("ts_a"))
-        .withWatermark("ts_a", delay)
-      val b = stream.select(col("event_id").as("event_b"),
-          col("user_id").as("user_b"), col("ts").as("ts_b"))
-        .withWatermark("ts_b", delay)
-      val joined = a.join(b,
-        col("user_a") === col("user_b") &&
-          col("ts_b") > col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES"),
-        "leftSemi")
-      val query = joined.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select("user_a", "event_a")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$keptDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val keptDir = Drain.run(spark, "graft_semi_join", Seq(src)) { d =>
+      d.foreachBatch(purchaseFollowups(d.open(src), delay, tolMin,
+        "leftSemi"))(_.select("user_a", "event_a"))
     }
     spark.read.parquet(keptDir)
       .filter(col("user_a") >= 0)
@@ -1112,11 +780,6 @@ object StreamAssembly {
         countDistinct("user_a").as("n_users"))
       .orderBy("user_bucket")
   }
-
-  private val unionSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int),
-        (String, String)]
 
   /** Fixture scaffolding for [[streamUnionSources]]: the events table
     * split by type into TWO independent staged sources (purchases vs
@@ -1129,36 +792,16 @@ object StreamAssembly {
     * demonstrates the engine handles.
     */
   private def stageSplitEventsSentinel(spark: SparkSession, sfDir: String,
-                                       nFiles: Int): (String, String) =
-    unionSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val events = graft.Tables.events(spark, sfDir)
-        .select(col("event_id").cast("long").as("event_id"),
-          col("user_id").cast("long").as("user_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          col("value").cast("double").as("value"))
-      val maxTs = events.agg(max("ts")).first().getTimestamp(0)
-      val sentinelTs = new java.sql.Timestamp(
-        maxTs.getTime + 41L * 86400000L)
-      import spark.implicits._
-      def stage(slice: DataFrame, name: String): String = {
-        val d = java.nio.file.Files
-          .createTempDirectory(s"graft_union_$name").toString
-        val dir = new java.io.File(d)
-        def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-        slice.repartition(nFiles).write.mode("overwrite").parquet(d)
-        val firstWave = parts().map(_.getPath).toSet
-        Seq((-1L, -1L, sentinelTs, "sentinel", 0.0))
-          .toDF("event_id", "user_id", "ts", "event_type", "value")
-          .coalesce(1).write.mode("append").parquet(d)
-        val stamp = parts().map(_.lastModified).max + 60000L
-        parts().filterNot(f => firstWave(f.getPath))
-          .foreach(_.setLastModified(stamp))
-        d
-      }
-      (stage(events.filter(col("event_type") === "purchase"), "a"),
-        stage(events.filter(col("event_type") =!= "purchase"), "b"))
-    })
+                                       nFiles: Int): (Drain.Staged, Drain.Staged) = {
+    lazy val events = eventCols(spark, sfDir,
+      "event_id", "user_id", "ts", "event_type", "value")
+    lazy val sentinel = sentinelRow(events)
+    def stage(half: String, keep: Column) =
+      Drain.stageWaves(spark, s"events_$half", sfDir, nFiles)(
+        Seq(events.filter(keep).repartition(nFiles), sentinel))
+    (stage("purchases", col("event_type") === "purchase"),
+      stage("others", col("event_type") =!= "purchase"))
+  }
 
   /** TWO independent streaming sources UNIONED into one windowed
     * aggregate — the multi-topic ingest topology (fan-in), and the
@@ -1174,36 +817,18 @@ object StreamAssembly {
     */
   def streamUnionSources(spark: SparkSession, sfDir: String,
                          nFiles: Int = 2): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_union_out").toString
-    val outDir = s"$tmp/daily"
-    val ckptDir = s"$tmp/ckpt"
-    val (dirA, dirB) = stageSplitEventsSentinel(spark, sfDir, nFiles)
+    val (srcA, srcB) = stageSplitEventsSentinel(spark, sfDir, nFiles)
     // a union batch is still one staged file per trigger, from either
     // half: the larger of the two halves' staged files sizes it
-    withDrainConf(spark, srcDirs = Seq(dirA, dirB)) { ds =>
-      def source(d: String) = ds.readStream
-        .schema(enrichEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-        .withWatermark("ts", "40 days")
-      val daily = source(dirA).unionByName(source(dirB))
+    val outDir = Drain.run(spark, "graft_union_out", Seq(srcA, srcB)) { d =>
+      def source(s: Drain.Staged) = d.open(s).withWatermark("ts", "40 days")
+      d.foreachBatch(source(srcA).unionByName(source(srcB))
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("sum_value"))
-      val query = daily.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select(col("window.start").as("day"), col("event_type"),
-              col("n_events"), col("sum_value"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          sum(col("value").cast("decimal(18,6)")).as("sum_value"))) {
+        _.select(col("window.start").as("day"), col("event_type"),
+          col("n_events"), col("sum_value"))
+      }
     }
     spark.read.parquet(outDir)
       .filter(col("event_type") =!= "sentinel")
@@ -1212,19 +837,6 @@ object StreamAssembly {
         round(col("sum_value").cast("double"), 2).as("total_value"))
       .orderBy("day", "event_type")
   }
-
-  private def purchaseSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType)))
-
-  private val loJoinSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), String]
 
   /** Fixture SCAFFOLDING for the left-outer join drain: PURCHASE events
     * re-staged as time-ordered chunk files (contiguous ts ranges,
@@ -1237,41 +849,21 @@ object StreamAssembly {
   private def stagePurchaseChunksWithSentinel(spark: SparkSession,
                                               sfDir: String, nChunks: Int,
                                               tolMin: Int,
-                                              delayMs: Long): String =
-    loJoinSrcCache.getOrElseUpdate((spark, sfDir, nChunks, tolMin), {
+                                              delayMs: Long): Drain.Staged =
+    Drain.stageWaves(spark, "purchase_chunks", sfDir, nChunks, tolMin,
+        delayMs) {
       val purchases = graft.Tables.events(spark, sfDir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id").cast("long").as("event_id"),
           col("user_id").cast("long").as("user_id"),
           col("ts").cast("timestamp").as("ts"))
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_lo_src").toString
-      val mm = purchases.agg(min("ts"), max("ts")).first()
-      val (t0, t1) = (mm.getTimestamp(0).getTime, mm.getTimestamp(1).getTime)
-      val step = (t1 - t0) / nChunks + 1
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      var seen = Set.empty[String]
-      var stamp = System.currentTimeMillis()
-      (0 until nChunks).foreach { i =>
-        val lo = new java.sql.Timestamp(t0 + i.toLong * step)
-        val hi = new java.sql.Timestamp(t0 + (i + 1).toLong * step)
-        purchases.filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
-          .coalesce(1).write.mode("append").parquet(d)
-        stamp += 60000L
-        parts().filterNot(f => seen(f.getPath)).foreach { f =>
-          f.setLastModified(stamp); seen += f.getPath
-        }
-      }
+      val (chunks, t1) = timeChunks(purchases, nChunks)
       import spark.implicits._
       val sentinelTs = new java.sql.Timestamp(
         t1 + delayMs + tolMin * 60000L + 86400000L)
-      Seq((-1L, -1L, sentinelTs)).toDF("event_id", "user_id", "ts")
-        .coalesce(1).write.mode("append").parquet(d)
-      stamp += 60000L
-      parts().filterNot(f => seen(f.getPath)).foreach(_.setLastModified(stamp))
-      d
-    })
+      chunks :+ Seq((-1L, -1L, sentinelTs)).toDF("event_id", "user_id", "ts")
+        .coalesce(1)
+    }
 
   /** The stream-stream FULL OUTER join exercised end-to-end — the
     * symmetric completion of the join-mode family ([[streamJoinFollowupsWatermarked]]
@@ -1292,41 +884,11 @@ object StreamAssembly {
   def streamJoinFullOuter(spark: SparkSession, sfDir: String,
                           nChunks: Int = 4, tolMin: Int = JoinTolMin,
                           delay: String = "2 hours"): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_fo_join").toString
-    val pairsDir = s"$tmp/pairs"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stagePurchaseChunksWithSentinel(
+    val src = stagePurchaseChunksWithSentinel(
       spark, sfDir, nChunks, tolMin, delayMs = 2 * 3600000L)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(purchaseSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val a = stream.select(col("event_id").as("event_a"),
-          col("user_id").as("user_a"), col("ts").as("ts_a"))
-        .withWatermark("ts_a", delay)
-      val b = stream.select(col("event_id").as("event_b"),
-          col("user_id").as("user_b"), col("ts").as("ts_b"))
-        .withWatermark("ts_b", delay)
-      val joined = a.join(b,
-        col("user_a") === col("user_b") &&
-          col("ts_b") > col("ts_a") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $tolMin MINUTES"),
-        "fullOuter")
-      val query = joined.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // idempotent per-batch commit (crash-replay overwrites itself)
-          batch.select("user_a", "event_a", "user_b", "event_b")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$pairsDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val pairsDir = Drain.run(spark, "graft_fo_join", Seq(src)) { d =>
+      d.foreachBatch(purchaseFollowups(d.open(src), delay, tolMin,
+        "fullOuter"))(_.select("user_a", "event_a", "user_b", "event_b"))
     }
     spark.read.parquet(pairsDir)
       .filter(coalesce(col("user_a"), col("user_b")) >= 0)
@@ -1363,38 +925,15 @@ object StreamAssembly {
     */
   def streamUpdateUpsert(spark: SparkSession, sfDir: String,
                          nFiles: Int = 4): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_upsert").toString
-    val upsertDir = s"$tmp/upserts"
-    val ckptDir = s"$tmp/ckpt"
-    val events = graft.Tables.events(spark, sfDir)
-    val srcDir = stagedSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val d = s"$tmp/src"
-      events.repartition(nFiles).write.parquet(d)
-      d
-    })
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val running = stream
+    val src = stagedEvents(spark, sfDir, nFiles)
+    // the batch=<id> dir doubles as the version stamp (partition
+    // discovery surfaces it as the `batch` column on readback)
+    val upsertDir = Drain.run(spark, "graft_upsert", Seq(src),
+        outputMode = "update") { d =>
+      d.foreachBatch(d.open(src)
         .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("sum_value"))
-      val query = running.writeStream
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // the batch=<id> dir doubles as the version stamp (partition
-          // discovery surfaces it as the `batch` column on readback)
-          batch.coalesce(1).write.mode("overwrite")
-            .parquet(s"$upsertDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          sum(col("value").cast("decimal(18,6)")).as("sum_value")))(identity)
     }
     spark.read.parquet(upsertDir)
       .groupBy("day", "event_type")
@@ -1406,10 +945,6 @@ object StreamAssembly {
       .orderBy("day", "event_type")
   }
 
-  private val dedupWindowSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), String]
-
   /** Fixture scaffolding for [[streamDedupWindow]]: every event delivered
     * TWICE ([[stageEventsWithReplay]]'s at-least-once shape) plus a
     * far-future sentinel event (event_id −1) staged strictly newest. The
@@ -1420,38 +955,13 @@ object StreamAssembly {
     * (the dedup state sees both copies of every event first).
     */
   private def stageEventsReplaySentinel(spark: SparkSession, sfDir: String,
-                                        nFiles: Int): String =
-    dedupWindowSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val events = graft.Tables.events(spark, sfDir)
-        .select(col("event_id").cast("long").as("event_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          col("value").cast("double").as("value"))
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_dedup_win_src").toString
-      events.repartition(nFiles).write.mode("overwrite").parquet(d)
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      val firstWave = parts().map(_.getPath).toSet
-      events.repartition(nFiles).write.mode("append").parquet(d)
-      var stamp = parts().map(_.lastModified).max + 60000L
-      parts().filterNot(f => firstWave(f.getPath))
-        .foreach(_.setLastModified(stamp))
-      val secondWave = parts().map(_.getPath).toSet
-      import spark.implicits._
-      val maxTs = events.agg(max("ts")).first().getTimestamp(0)
-      // 41 days past the newest event: watermark (max − 40 d) ends past
-      // every real event, closing every real day window
-      val sentinelTs = new java.sql.Timestamp(
-        maxTs.getTime + 41L * 86400000L)
-      Seq((-1L, sentinelTs, "sentinel", 0.0))
-        .toDF("event_id", "ts", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(d)
-      stamp += 60000L
-      parts().filterNot(f => secondWave(f.getPath))
-        .foreach(_.setLastModified(stamp))
-      d
-    })
+                                        nFiles: Int): Drain.Staged =
+    Drain.stageWaves(spark, "events_replay_sentinel", sfDir, nFiles) {
+      val events = eventCols(spark, sfDir, "event_id", "ts", "event_type",
+        "value")
+      Seq(events.repartition(nFiles), events.repartition(nFiles),
+        sentinelRow(events))
+    }
 
   /** TWO stateful operators CHAINED in one streaming query — the
     * multi-stateful pipeline (SPARK-42376) a real ingest topology needs:
@@ -1472,35 +982,17 @@ object StreamAssembly {
     */
   def streamDedupWindow(spark: SparkSession, sfDir: String,
                         nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_dedup_window").toString
-    val outDir = s"$tmp/daily"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageEventsReplaySentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(replayEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val daily = stream
+    val src = stageEventsReplaySentinel(spark, sfDir, nFiles)
+    val outDir = Drain.run(spark, "graft_dedup_window", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)
         .withWatermark("ts", "40 days")
         .dropDuplicatesWithinWatermark("event_id")
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("sum_value"))
-      val query = daily.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select(col("window.start").as("day"), col("event_type"),
-              col("n_events"), col("sum_value"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          sum(col("value").cast("decimal(18,6)")).as("sum_value"))) {
+        _.select(col("window.start").as("day"), col("event_type"),
+          col("n_events"), col("sum_value"))
+      }
     }
     spark.read.parquet(outDir)
       .filter(col("event_type") =!= "sentinel")
@@ -1509,23 +1001,6 @@ object StreamAssembly {
         round(sum("sum_value").cast("double"), 2).as("total_value"))
       .orderBy("day", "event_type")
   }
-
-  private val userEventSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), String]
-
-  private def enrichEventSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
 
   /** Fixture scaffolding shared by [[streamSlidingCounts]] and
     * [[streamStaticEnrich]]: the events table (WITH user_id, for the
@@ -1536,32 +1011,12 @@ object StreamAssembly {
     * AvailableNow drain stops. Memoized per (session, dir, N).
     */
   private def stageUserEventsSentinel(spark: SparkSession, sfDir: String,
-                                      nFiles: Int): String =
-    userEventSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val events = graft.Tables.events(spark, sfDir)
-        .select(col("event_id").cast("long").as("event_id"),
-          col("user_id").cast("long").as("user_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          col("value").cast("double").as("value"))
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_user_evt_src").toString
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      events.repartition(nFiles).write.mode("overwrite").parquet(d)
-      val firstWave = parts().map(_.getPath).toSet
-      val maxTs = events.agg(max("ts")).first().getTimestamp(0)
-      val sentinelTs = new java.sql.Timestamp(
-        maxTs.getTime + 41L * 86400000L)
-      import spark.implicits._
-      Seq((-1L, -1L, sentinelTs, "sentinel", 0.0))
-        .toDF("event_id", "user_id", "ts", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(d)
-      val stamp = parts().map(_.lastModified).max + 60000L
-      parts().filterNot(f => firstWave(f.getPath))
-        .foreach(_.setLastModified(stamp))
-      d
-    })
+                                      nFiles: Int): Drain.Staged =
+    Drain.stageWaves(spark, "user_events_sentinel", sfDir, nFiles) {
+      val events = eventCols(spark, sfDir, "event_id", "user_id", "ts",
+        "event_type", "value")
+      Seq(events.repartition(nFiles), sentinelRow(events))
+    }
 
   /** SLIDING event-time windows drained end-to-end — the overlap
     * completion of the window-shape family (T2 covers tumbling via
@@ -1579,34 +1034,16 @@ object StreamAssembly {
     */
   def streamSlidingCounts(spark: SparkSession, sfDir: String,
                           nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_sliding").toString
-    val outDir = s"$tmp/sliding"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageUserEventsSentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(enrichEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val slid = stream
+    val src = stageUserEventsSentinel(spark, sfDir, nFiles)
+    val outDir = Drain.run(spark, "graft_sliding", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)
         .withWatermark("ts", "40 days")
         .groupBy(window(col("ts"), "1 day", "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("sum_value"))
-      val query = slid.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select(col("window.start").as("win_start"),
-              col("event_type"), col("n_events"), col("sum_value"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          sum(col("value").cast("decimal(18,6)")).as("sum_value"))) {
+        _.select(col("window.start").as("win_start"),
+          col("event_type"), col("n_events"), col("sum_value"))
+      }
     }
     spark.read.parquet(outDir)
       .filter(col("event_type") =!= "sentinel")
@@ -1631,37 +1068,19 @@ object StreamAssembly {
     */
   def streamStaticEnrich(spark: SparkSession, sfDir: String,
                          nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_enrich").toString
-    val outDir = s"$tmp/enriched"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageUserEventsSentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val dim = broadcast(graft.Tables.customer(ds, sfDir)
+    val src = stageUserEventsSentinel(spark, sfDir, nFiles)
+    val outDir = Drain.run(spark, "graft_enrich", Seq(src)) { d =>
+      val dim = broadcast(graft.Tables.customer(d.session, sfDir)
         .select(col("c_custkey"), col("c_mktsegment")))
-      val stream = ds.readStream
-        .schema(enrichEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val enriched = stream
+      d.foreachBatch(d.open(src)
         .withWatermark("ts", "40 days")
         .join(dim, col("user_id") === col("c_custkey"))
         .groupBy(window(col("ts"), "1 day"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,6)")).as("sum_value"))
-      val query = enriched.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select(col("window.start").as("day"),
-              col("c_mktsegment"), col("n_events"), col("sum_value"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          sum(col("value").cast("decimal(18,6)")).as("sum_value"))) {
+        _.select(col("window.start").as("day"),
+          col("c_mktsegment"), col("n_events"), col("sum_value"))
+      }
     }
     spark.read.parquet(outDir)
       .select(col("day"), col("c_mktsegment"),
@@ -1693,43 +1112,17 @@ object StreamAssembly {
   def streamSessionsTws(spark: SparkSession, sfDir: String,
                         nFiles: Int = 4, gapMinutes: Int = 30,
                         crashAfterBatches: Int = 0): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_stream_tws").toString
-    val outDir = s"$tmp/sessions"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageUserEventsWithSentinel(spark, sfDir, nFiles, gapMinutes)
+    val src = stageUserEventsWithSentinel(spark, sfDir, nFiles, gapMinutes)
     // transformWithState requires the RocksDB provider (also the store
-    // we'd run at scale); per-batch state commits dominate at fixture
-    // size, so run the drain on few shuffle partitions — both confs live
-    // on the drain clone only
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    withDrainConf(spark, Map(provKey ->
-      ("org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")), srcDirs = Seq(srcDir)) { ds =>
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(userEventSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-        val query = SessionizeTws
-          .sessionize(stream, gapMinutes, watermark = "40 days")
-          .toDF()
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // idempotent per-batch segment: the crash-replayed batch
-            // REPLACES its rows instead of double-appending them
-            batch.coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/batch=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
-      }
-      runWithInjectedCrash(drain, crashAfterBatches)
+    // we'd run at scale); it lives on the drain clone only
+    val outDir = Drain.run(spark, "graft_stream_tws", Seq(src),
+        extra = Map("spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider")),
+        crashAfterBatches = crashAfterBatches) { d =>
+      d.foreachBatch(SessionizeTws
+        .sessionize(d.open(src), gapMinutes, watermark = "40 days")
+        .toDF())(identity)
     }
     spark.read.parquet(outDir)
       .filter(col("user_id") >= 0)
@@ -1737,21 +1130,8 @@ object StreamAssembly {
       .orderBy("user_id", "session_start")
   }
 
-  private val twsSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int, Int), String]
-
-  private def userEventSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-
   /** Fixture SCAFFOLDING shared by the stateful-session streaming queries
-    * (memoized like stagedSrcCache): the events table re-staged as N
+    * (memoized by Drain.stageWaves): the events table re-staged as N
     * (user_id, ts, value) parquet files plus one far-future SENTINEL row
     * (user −1) staged as the strictly-newest file, so the file source
     * reads it last and its event time pushes the final watermark past
@@ -1760,32 +1140,15 @@ object StreamAssembly {
     */
   private def stageUserEventsWithSentinel(spark: SparkSession, sfDir: String,
                                           nFiles: Int,
-                                          gapMinutes: Int): String =
-    // gapMinutes shapes the staged SENTINEL timestamp, so it must be part
-    // of the cache key — a cache hit staged for a smaller gap could leave
-    // a larger gap's final sessions unflushed
-    twsSrcCache.getOrElseUpdate((spark, sfDir, nFiles, gapMinutes), {
-      val events = graft.Tables.events(spark, sfDir)
-        .select(col("user_id").cast("long").as("user_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("value").cast("double").as("value"))
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_tws_src").toString
-      events.repartition(nFiles).write.mode("overwrite").parquet(d)
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      val staged = parts().map(_.getPath).toSet
-      val maxTs = events.agg(max("ts")).first().getTimestamp(0)
-      val sentinelTs = new java.sql.Timestamp(
-        maxTs.getTime + 41L * 86400000L + gapMinutes * 60000L)
-      import spark.implicits._
-      Seq((-1L, sentinelTs, 0.0)).toDF("user_id", "ts", "value")
-        .coalesce(1).write.mode("append").parquet(d)
-      val newest = parts().map(_.lastModified).max + 60000L
-      parts().filterNot(f => staged(f.getPath))
-        .foreach(_.setLastModified(newest))
-      d
-    })
+                                          gapMinutes: Int): Drain.Staged =
+    // gapMinutes shapes the staged SENTINEL timestamp, so it is part of
+    // the memo key — a hit staged for a smaller gap could leave a larger
+    // gap's final sessions unflushed
+    Drain.stageWaves(spark, "session_events", sfDir, nFiles, gapMinutes) {
+      val events = eventCols(spark, sfDir, "user_id", "ts", "value")
+      Seq(events.repartition(nFiles),
+        sentinelRow(events, pastMs = gapMinutes * 60000L))
+    }
 
   /** The BUILT-IN `session_window` aggregate exercised in STREAMING mode
     * as an oracle-checked query — the engine-native sibling of
@@ -1802,42 +1165,20 @@ object StreamAssembly {
   def streamSessionWindows(spark: SparkSession, sfDir: String,
                            nFiles: Int = 4,
                            gapMinutes: Int = 30,
-                           crashAfterBatches: Int = 0): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_stream_sw").toString
-    val outDir = s"$tmp/sessions"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageUserEventsWithSentinel(spark, sfDir, nFiles, gapMinutes)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(userEventSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-        val query = stream
-          .withWatermark("ts", "40 days")
-          .groupBy(col("user_id"),
-            session_window(col("ts"), s"$gapMinutes minutes").as("w"))
-          .agg(count(lit(1)).as("n_events"),
-            round(sum("value"), 2).as("total_value"))
-          .select(col("user_id"), col("w.start").as("session_start"),
-            col("w.end").as("session_end"), col("n_events"),
-            col("total_value"))
-          .writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // idempotent per-batch segment (replayed batch replaces)
-            batch.coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/batch=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
-      }
-      runWithInjectedCrash(drain, crashAfterBatches)
+                           crashAfterBatches: Int = 0,
+                           partitions: Option[Int] = None): DataFrame = {
+    val src = stageUserEventsWithSentinel(spark, sfDir, nFiles, gapMinutes)
+    val outDir = Drain.run(spark, "graft_stream_sw", Seq(src),
+        crashAfterBatches = crashAfterBatches, partitions = partitions) { d =>
+      d.foreachBatch(d.open(src)
+        .withWatermark("ts", "40 days")
+        .groupBy(col("user_id"),
+          session_window(col("ts"), s"$gapMinutes minutes").as("w"))
+        .agg(count(lit(1)).as("n_events"),
+          round(sum("value"), 2).as("total_value"))
+        .select(col("user_id"), col("w.start").as("session_start"),
+          col("w.end").as("session_end"), col("n_events"),
+          col("total_value")))(identity)
     }
     spark.read.parquet(outDir)
       .filter(col("user_id") >= 0)
@@ -1868,46 +1209,26 @@ object StreamAssembly {
     */
   def streamSessionsDynamicGap(spark: SparkSession, sfDir: String,
                                nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_dyn_gap").toString
-    val outDir = s"$tmp/sessions"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageUserEventsSentinel(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(enrichEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
+    val src = stageUserEventsSentinel(spark, sfDir, nFiles)
+    val outDir = Drain.run(spark, "graft_dyn_gap", Seq(src)) { d =>
       val gap = when(col("event_type") === "purchase",
         lit(s"$DynGapPurchaseMin minutes"))
         .otherwise(lit(s"$DynGapDefaultMin minutes"))
-      val query = stream
+      d.foreachBatch(d.open(src)
         .withWatermark("ts", "40 days")
         .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast("decimal(18,6)")).as("sum_value"))
         .select(col("user_id"), col("w.start").as("session_start"),
           col("n_events"),
-          round(col("sum_value").cast("double"), 2).as("total_value"))
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          round(col("sum_value").cast("double"), 2).as("total_value")))(
+        identity)
     }
     spark.read.parquet(outDir)
       .filter(col("user_id") >= 0)
+      .select("user_id", "session_start", "n_events", "total_value")
       .orderBy("user_id", "session_start")
   }
-
-  private val replaySrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), String]
 
   /** Fixture scaffolding for [[streamDedupReplay]]: the events table
     * staged as `nFiles` parquet files and then the SAME rows staged AGAIN
@@ -1918,36 +1239,12 @@ object StreamAssembly {
     * twice, in different micro-batches.
     */
   private def stageEventsWithReplay(spark: SparkSession, sfDir: String,
-                                    nFiles: Int): String =
-    replaySrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
-      val events = graft.Tables.events(spark, sfDir)
-        .select(col("event_id").cast("long").as("event_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          col("value").cast("double").as("value"))
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_replay_src").toString
-      events.repartition(nFiles).write.mode("overwrite").parquet(d)
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      val staged = parts().map(_.getPath).toSet
-      events.repartition(nFiles).write.mode("append").parquet(d)
-      val newest = parts().map(_.lastModified).max + 60000L
-      parts().filterNot(f => staged(f.getPath))
-        .foreach(_.setLastModified(newest))
-      d
-    })
-
-  private def replayEventSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
+                                    nFiles: Int): Drain.Staged =
+    Drain.stageWaves(spark, "events_replay", sfDir, nFiles) {
+      val events = eventCols(spark, sfDir, "event_id", "ts", "event_type",
+        "value")
+      Seq(events.repartition(nFiles), events.repartition(nFiles))
+    }
 
   /** Streaming exact-once dedup as an ORACLE-CHECKED query: the staged
     * stream delivers every event TWICE (cross-batch replay, the
@@ -1966,29 +1263,11 @@ object StreamAssembly {
     */
   def streamDedupReplay(spark: SparkSession, sfDir: String,
                         nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_stream_dedup").toString
-    val outDir = s"$tmp/deduped"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageEventsWithReplay(spark, sfDir, nFiles)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(replayEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream
+    val src = stageEventsWithReplay(spark, sfDir, nFiles)
+    val outDir = Drain.run(spark, "graft_stream_dedup", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)
         .withWatermark("ts", "40 days")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      query.awaitTermination()
+        .dropDuplicatesWithinWatermark("event_id"))(identity)
     }
     spark.read.parquet(outDir)
       .groupBy("event_type")
@@ -1997,10 +1276,6 @@ object StreamAssembly {
           .as("total_value"))
       .orderBy("event_type")
   }
-
-  private val lateSrcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(org.apache.spark.sql.SparkSession, String, Int), String]
 
   /** Fixture scaffolding for [[streamLateDrop]]: the events table minus
     * its globally-OLDEST event (min (ts, event_id) — a deterministic
@@ -2014,55 +1289,26 @@ object StreamAssembly {
     * every pending window before Trigger.AvailableNow stops).
     */
   private def stageEventsWithLateStraggler(spark: SparkSession, sfDir: String,
-                                           nFiles: Int): String =
-    lateSrcCache.getOrElseUpdate((spark, sfDir, nFiles), {
+                                           nFiles: Int): Drain.Staged =
+    Drain.stageWaves(spark, "events_late", sfDir, nFiles) {
       import org.apache.spark.sql.expressions.Window
-      val events = graft.Tables.events(spark, sfDir)
-        .select(col("event_id").cast("long").as("event_id"),
-          col("ts").cast("timestamp").as("ts"),
-          col("event_type").cast("string").as("event_type"),
-          col("value").cast("double").as("value"))
+      val events = eventCols(spark, sfDir, "event_id", "ts", "event_type",
+        "value")
       // min(struct(ts, event_id)): same deterministic oldest event as a
       // global ORDER BY ... LIMIT 1, via one aggregate instead of a sort
       val oldest = events
         .agg(min(struct(col("ts"), col("event_id"))).as("m"))
         .select(col("m.event_id")).first().getLong(0)
-      val maxTs = events.agg(max("ts")).first().getTimestamp(0)
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_late_src").toString
-      val dir = new java.io.File(d)
-      def parts() = dir.listFiles().filter(_.getName.endsWith(".parquet"))
-      def bumpNewerThan(prev: Set[String], offset: Long): Unit = {
-        val newest =
-          (0L +: parts().map(_.lastModified)).max + offset
-        parts().filterNot(f => prev(f.getPath))
-          .foreach(_.setLastModified(newest))
-      }
+      val sentinel = sentinelRow(events)
       // fixture scaffolding only: the global ntile runs once over the
       // staged fixture, never inside a registered query plan
       val chunked = events.filter(col("event_id") =!= oldest)
         .withColumn("chunk", ntile(nFiles).over(
           Window.orderBy(col("ts"), col("event_id"))))
-      (1 to nFiles).foreach { c =>
-        val prev = parts().map(_.getPath).toSet
-        chunked.filter(col("chunk") === c).drop("chunk")
-          .coalesce(1).write.mode("append").parquet(d)
-        bumpNewerThan(prev, 60000L)
-      }
-      val withChunks = parts().map(_.getPath).toSet
-      events.filter(col("event_id") === oldest)
-        .coalesce(1).write.mode("append").parquet(d)
-      bumpNewerThan(withChunks, 60000L)
-      val withLate = parts().map(_.getPath).toSet
-      val sentinelTs = new java.sql.Timestamp(
-        maxTs.getTime + 41L * 86400000L)
-      import spark.implicits._
-      Seq((-1L, sentinelTs, "sentinel", 0.0))
-        .toDF("event_id", "ts", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(d)
-      bumpNewerThan(withLate, 60000L)
-      d
-    })
+      (1 to nFiles).map(c =>
+        chunked.filter(col("chunk") === c).drop("chunk").coalesce(1)) ++
+        Seq(events.filter(col("event_id") === oldest).coalesce(1), sentinel)
+    }
 
   /** Watermark LATE-DATA DROP as an oracle-checked query (T3's other
     * half): an hourly×type windowed aggregate with a 1-day watermark
@@ -2080,40 +1326,23 @@ object StreamAssembly {
     */
   def streamLateDrop(spark: SparkSession, sfDir: String,
                      nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_stream_late").toString
-    val outDir = s"$tmp/rollup"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = stageEventsWithLateStraggler(spark, sfDir, nFiles)
+    val src = stageEventsWithLateStraggler(spark, sfDir, nFiles)
     val maxHour = graft.Tables.events(spark, sfDir)
       .agg(date_trunc("hour", max(col("ts").cast("timestamp"))))
       .first().getTimestamp(0)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(replayEventSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream
+    val outDir = Drain.run(spark, "graft_stream_late", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)
         .withWatermark("ts", "1 day")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value").cast("decimal(18,6)")).cast("double"), 2)
             .as("total_value"))
         .select(col("window.start").as("hour"), col("event_type"),
-          col("n_events"), col("total_value"))
-        .writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(1).write.mode("append").parquet(outDir)
-          ()
-        }
-        .start()
-      query.awaitTermination()
+          col("n_events"), col("total_value")))(identity)
     }
     spark.read.parquet(outDir)
       .filter(col("hour") <= lit(maxHour))
+      .select("hour", "event_type", "n_events", "total_value")
       .orderBy("hour", "event_type")
   }
 
@@ -2141,52 +1370,26 @@ object StreamAssembly {
     */
   def streamDedupProbe(spark: SparkSession, sfDir: String,
                        nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_dedup_probe").toString
-    val outDir = s"$tmp/probe"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "text")
+    val outDir = Drain.run(spark, "graft_dedup_probe", Seq(src)) { d =>
+      graft.functions.GraftFunctions.register(d.session)
       def bandsOf(docs: DataFrame): DataFrame =
         graft.ops.Dedup.bandedSignatures(
           docs.select(col("doc_id"),
               graft.ops.Dedup.shingleCol(col("text")).as("ss"))
             .withColumn("n", size(col("ss"))),
           k = 12, rowsPerBand = 2)
-      val index = bandsOf(graft.Tables.documents(ds, sfDir)
+      val index = bandsOf(graft.Tables.documents(d.session, sfDir)
           .filter(col("doc_id") % 2 === 0))
         .select(col("doc_id").as("index_doc"), col("band"), col("bsig"))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          bandsOf(batch)
-            .join(broadcast(index), Seq("band", "bsig"))
-            .groupBy("doc_id")
-            .agg(countDistinct(col("index_doc")).as("n_index_matches"),
-              min(col("index_doc")).as("first_match"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      d.foreachBatch(d.open(src)) {
+        bandsOf(_)
+          .join(broadcast(index), Seq("band", "bsig"))
+          .groupBy("doc_id")
+          .agg(countDistinct(col("index_doc")).as("n_index_matches"),
+            min(col("index_doc")).as("first_match"))
+      }
     }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_index_matches"), col("first_match"))
@@ -2218,22 +1421,9 @@ object StreamAssembly {
   def streamSubstrProbe(spark: SparkSession, sfDir: String,
                         nFiles: Int = 3,
                         k: Int = graft.ops.Dedup.SpanK): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_substr_probe").toString
-    val outDir = s"$tmp/probe"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "text")
+    val outDir = Drain.run(spark, "graft_substr_probe", Seq(src)) { d =>
       def gramsOf(docs: DataFrame): DataFrame =
         docs.withColumn("ws", split(col("text"), " "))
           .filter(size(col("ws")) >= k)
@@ -2247,38 +1437,25 @@ object StreamAssembly {
             col("g.start").as("start"), col("g.gram").as("gram"))
       // the static history index: distinct k-grams of the even half,
       // materialized once and reused by every micro-batch
-      val index = gramsOf(graft.Tables.documents(ds, sfDir)
+      val index = gramsOf(graft.Tables.documents(d.session, sfDir)
           .filter(col("doc_id") % 2 === 0))
         .select("gram").distinct()
         .localCheckpoint(true)
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val g = gramsOf(batch)
-          val docs = batch.withColumn("ws", split(col("text"), " "))
-            .filter(size(col("ws")) >= k)
-            .select(col("doc_id"), size(col("ws")).cast("long").as("n_tok"))
-          val dup = g.join(index, Seq("gram"), "left_semi")
-            .select(col("doc_id"),
-              explode(sequence(col("start"), col("start") + lit(k - 1)))
-                .as("p"))
-            .distinct()
-            .groupBy("doc_id").agg(count(lit(1)).as("n_dup_tok"))
-          docs.join(dup, Seq("doc_id"), "left_outer")
-            .select(col("doc_id"), col("n_tok"),
-              coalesce(col("n_dup_tok"), lit(0L)).as("n_dup_tok"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      d.foreachBatch(d.open(src)) { batch =>
+        val g = gramsOf(batch)
+        val docs = batch.withColumn("ws", split(col("text"), " "))
+          .filter(size(col("ws")) >= k)
+          .select(col("doc_id"), size(col("ws")).cast("long").as("n_tok"))
+        val dup = g.join(index, Seq("gram"), "left_semi")
+          .select(col("doc_id"),
+            explode(sequence(col("start"), col("start") + lit(k - 1)))
+              .as("p"))
+          .distinct()
+          .groupBy("doc_id").agg(count(lit(1)).as("n_dup_tok"))
+        docs.join(dup, Seq("doc_id"), "left_outer")
+          .select(col("doc_id"), col("n_tok"),
+            coalesce(col("n_dup_tok"), lit(0L)).as("n_dup_tok"))
+      }
     }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_tok"), col("n_dup_tok"))
@@ -2308,46 +1485,17 @@ object StreamAssembly {
     */
   def streamQualityGate(spark: SparkSession, sfDir: String,
                         nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_quality_gate").toString
-    val outDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"), col("n_chars"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    val docSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars",
-        org.apache.spark.sql.types.LongType)))
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "text", "n_chars")
+    val outDir = Drain.run(spark, "graft_quality_gate", Seq(src)) { d =>
       // register the word_ngrams kernel BEFORE the stream starts: each
       // micro-batch runs on a session clone whose function registry is
       // copied at clone time
-      graft.functions.GraftFunctions.register(ds)
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.ops.TextAnalysis.funnelAggregate(
-              graft.ops.TextAnalysis.funnelFirstFail(batch.sparkSession,
-                batch))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src)) { batch =>
+        graft.ops.TextAnalysis.funnelAggregate(
+          graft.ops.TextAnalysis.funnelFirstFail(batch.sparkSession, batch))
+      }
     }
     val folded = spark.read.parquet(outDir).agg(
       sum("total").as("total"), sum("k1").as("k1"), sum("k2").as("k2"),
@@ -2356,17 +1504,6 @@ object StreamAssembly {
       .na.fill(0L)
     graft.ops.TextAnalysis.funnelPresent(folded)
   }
-
-  /** (doc_id, source, text) read schema shared by the document probe
-    * drains (BM25 scoring, KL drift) — one definition so the probes'
-    * staging surface cannot drift apart. */
-  private val docProbeSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("source",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("text",
-      org.apache.spark.sql.types.StringType)))
 
   /** ONLINE perceptual-image probe drained end-to-end — the multimodal
     * fingerprint joins the probe family (dedup/substr/ANN/quality/BM25/
@@ -2389,22 +1526,11 @@ object StreamAssembly {
     */
   def streamImageProbe(spark: SparkSession, sfDir: String,
                        nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     val mm = graft.multimodal.Multimodal
     val h = mm.DhashMaxHamming
-    val tmp = Files.createTempDirectory("graft_image_probe").toString
-    val outDir = s"$tmp/probe"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 6 === 3)
-      .select(col("doc_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val idSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType)))
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 6 === 3, nFiles, "doc_id")
+    val outDir = Drain.run(spark, "graft_image_probe", Seq(src)) { d =>
       // static banded index from the even image half, built once — over
       // DISTINCT fingerprints with multiplicity, not per-doc rows: a
       // dup-dense corpus (the sf1 replicate has 10 exact twins per
@@ -2412,7 +1538,7 @@ object StreamAssembly {
       // would otherwise make the probe join |incoming|·|index| inside
       // the hot bucket (measured 166 s at sf1; 4.4 s after). Results
       // are identical: matches per fingerprint × its doc multiplicity.
-      val bandedIdx = mm.imageDhash(ds, sfDir)
+      val bandedIdx = mm.imageDhash(d.session, sfDir)
         .filter(col("doc_id") % 6 === 0)
         .groupBy(col("dhash").as("idx_hash"))
         .agg(count(lit(1)).cast("long").as("idx_mult"),
@@ -2421,44 +1547,31 @@ object StreamAssembly {
           explode(sequence(lit(0), lit(6))).as("bandidx"))
         .withColumn("bandval", expr("(idx_hash >> (bandidx * 8)) & 255"))
         .localCheckpoint(true)
-      val stream = ds.readStream
-        .schema(idSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          import batch.sparkSession.implicits._
-          // fully-qualified module access inside the lambda: a captured
-          // `val` alias of the object would ship the module reference
-          // into the task closure (Task not serializable)
-          val probes = batch.select(col("doc_id")).as[Long]
-            .mapPartitions(_.map(d =>
-              (d, graft.multimodal.Multimodal.dhashOfId(d))))
-            .toDF("doc_id", "dhash")
-          probes
-            .select(col("doc_id"), col("dhash"),
-              explode(sequence(lit(0), lit(6))).as("bandidx"))
-            .withColumn("bandval", expr("(dhash >> (bandidx * 8)) & 255"))
-            .join(broadcast(bandedIdx), Seq("bandidx", "bandval"))
-            .filter(expr(s"bit_count(dhash ^ idx_hash) <= $h"))
-            // one row per matched FINGERPRINT (the band join can agree
-            // on several bands), then fold multiplicities
-            .groupBy("doc_id", "idx_hash")
-            .agg(first("idx_mult").as("m"), first("idx_min_doc").as("d"),
-              min(expr("bit_count(dhash ^ idx_hash)")).as("hm"))
-            .groupBy("doc_id")
-            .agg(sum("m").cast("long").as("n_index_matches"),
-              min("d").cast("long").as("first_match"),
-              min("hm").cast("long").as("min_hamming"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      d.foreachBatch(d.open(src)) { batch =>
+        import batch.sparkSession.implicits._
+        // fully-qualified module access inside the lambda: a captured
+        // `val` alias of the object would ship the module reference
+        // into the task closure (Task not serializable)
+        val probes = batch.select(col("doc_id")).as[Long]
+          .mapPartitions(_.map(d =>
+            (d, graft.multimodal.Multimodal.dhashOfId(d))))
+          .toDF("doc_id", "dhash")
+        probes
+          .select(col("doc_id"), col("dhash"),
+            explode(sequence(lit(0), lit(6))).as("bandidx"))
+          .withColumn("bandval", expr("(dhash >> (bandidx * 8)) & 255"))
+          .join(broadcast(bandedIdx), Seq("bandidx", "bandval"))
+          .filter(expr(s"bit_count(dhash ^ idx_hash) <= $h"))
+          // one row per matched FINGERPRINT (the band join can agree
+          // on several bands), then fold multiplicities
+          .groupBy("doc_id", "idx_hash")
+          .agg(first("idx_mult").as("m"), first("idx_min_doc").as("d"),
+            min(expr("bit_count(dhash ^ idx_hash)")).as("hm"))
+          .groupBy("doc_id")
+          .agg(sum("m").cast("long").as("n_index_matches"),
+            min("d").cast("long").as("first_match"),
+            min("hm").cast("long").as("min_hamming"))
+      }
     }
     spark.read.parquet(outDir)
       .select("doc_id", "n_index_matches", "first_match", "min_hamming")
@@ -2487,39 +1600,17 @@ object StreamAssembly {
     */
   def streamBm25Probe(spark: SparkSession, sfDir: String,
                       nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_bm25_probe").toString
-    val outDir = s"$tmp/scores"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("source"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    val docSchema = docProbeSchema
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "source", "text")
+    val outDir = Drain.run(spark, "graft_bm25_probe", Seq(src)) { d =>
       // frozen model from the even-half history, materialized once
       val (idf0, corpus0) = graft.ops.Retrieval.bm25Model(
-        graft.Tables.documents(ds, sfDir).filter(col("doc_id") % 2 === 0))
+        graft.Tables.documents(d.session, sfDir)
+          .filter(col("doc_id") % 2 === 0))
       val idf = idf0.localCheckpoint(true)
       val corpus = corpus0.localCheckpoint(true)
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.ops.Retrieval.bm25ScoreAgainst(batch, idf, corpus)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+      d.foreachBatch(d.open(src))(
+        graft.ops.Retrieval.bm25ScoreAgainst(_, idf, corpus))
     }
     spark.read.parquet(outDir)
       .select("doc_id", "source", "n_terms_hit", "score_micro")
@@ -2547,35 +1638,11 @@ object StreamAssembly {
     */
   def streamKlProbe(spark: SparkSession, sfDir: String,
                     nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     val nB = graft.ops.CorpusStats.KlBuckets
-    val tmp = Files.createTempDirectory("graft_kl_probe").toString
-    val outDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("source"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    val docSchema = docProbeSchema
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          graft.ops.CorpusStats.tokenBucketCounts(batch)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "source", "text")
+    val outDir = Drain.run(spark, "graft_kl_probe", Seq(src)) { d =>
+      d.foreachBatch(d.open(src))(graft.ops.CorpusStats.tokenBucketCounts)
     }
     val incoming = spark.read.parquet(outDir)
       .groupBy("source", "b").agg(sum("c").cast("long").as("c"))
@@ -2609,46 +1676,19 @@ object StreamAssembly {
     */
   def streamAnnProbe(spark: SparkSession, sfDir: String, nFiles: Int = 3,
                      nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Similarity.norm2
-    val tmp = Files.createTempDirectory("graft_ann_probe").toString
-    val outDir = s"$tmp/matches"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      col("vec_id") % 2 === 1, nFiles, "vec_id", "embedding")
+    val outDir = Drain.run(spark, "graft_ann_probe", Seq(src)) { d =>
       // one-time static side, shared with the batch recall audit
       val (cents, assigned) =
-        graft.ops.Similarity.annProbeIndex(ds, sfDir, nCells)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      val stream = ds.readStream
-        .schema(embSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val q = batch.select(col("vec_id").as("q_id"),
-            col("embedding").as("q_emb"),
-            norm2(col("embedding")).as("q_nrm"))
-          graft.ops.Similarity.ivfProbeTop1(q, cents, assigned, nProbe)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+        graft.ops.Similarity.annProbeIndex(d.session, sfDir, nCells)
+      d.foreachBatch(d.open(src)) { batch =>
+        val q = batch.select(col("vec_id").as("q_id"),
+          col("embedding").as("q_emb"),
+          norm2(col("embedding")).as("q_nrm"))
+        graft.ops.Similarity.ivfProbeTop1(q, cents, assigned, nProbe)
+      }
     }
     spark.read.parquet(outDir)
       .select(col("vec_id"), col("match_id"), col("cosine"))
@@ -2670,17 +1710,9 @@ object StreamAssembly {
     */
   def streamGraphProbe(spark: SparkSession, sfDir: String,
                        nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    import graft.ops.{KnnGraph, Similarity}
-    val tmp = Files.createTempDirectory("graft_graph_probe").toString
-    val outDir = s"$tmp/matches"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    import graft.ops.KnnGraph
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      col("vec_id") % 2 === 1, nFiles, "vec_id", "embedding")
     // static side on the OUTER session (the stream_pq_probe lesson):
     // the graph memo is context-keyed, so batch consumers share it
     val edges = KnnGraph.servingGraph(spark, sfDir)
@@ -2688,44 +1720,34 @@ object StreamAssembly {
     val idx = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val idxS = idx.select(col("vec_id"), col("embedding"),
-        Similarity.dot(col("embedding"), col("embedding")).as("sq"))
-        .localCheckpoint(true)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      val stream = ds.readStream
-        .schema(embSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val qs = batch.select(col("vec_id").as("q_id"),
-            col("embedding").as("q_emb"),
-            Similarity.dot(col("embedding"), col("embedding")).as("q_sq"))
-          KnnGraph.greedySearch(qs, idxS, edges)
-            .filter(col("rn") === 1)
-            .select(col("q_id").as("vec_id"), col("v").as("match_id"),
-              floor(col("dist") * lit(1e6)).cast("long").as("dist_u"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val outDir = Drain.run(spark, "graft_graph_probe", Seq(src)) { d =>
+      val idxS = greedyIndex(d, idx)
+      d.foreachBatch(d.open(src)) { batch =>
+        KnnGraph.greedySearch(greedyQueries(batch), idxS, edges)
+          .filter(col("rn") === 1)
+          .select(col("q_id").as("vec_id"), col("v").as("match_id"),
+            floor(col("dist") * lit(1e6)).cast("long").as("dist_u"))
+      }
     }
     spark.read.parquet(outDir)
       .select(col("vec_id"), col("match_id"), col("dist_u"))
       .orderBy("vec_id")
   }
+
+  /** The graph drains' index side on the drain session, materialized
+    * once: (vec_id, embedding, sq) with `vec_dot` registered.
+    */
+  private def greedyIndex(d: Drain, idx: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.register(d.session)
+    idx.select(col("vec_id"), col("embedding"),
+      graft.ops.Similarity.dot(col("embedding"), col("embedding")).as("sq"))
+      .localCheckpoint(true)
+  }
+
+  /** A micro-batch of (vec_id, embedding) as greedy-descent queries. */
+  private def greedyQueries(batch: DataFrame): DataFrame =
+    batch.select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
+      graft.ops.Similarity.dot(col("embedding"), col("embedding")).as("q_sq"))
 
   /** The graph-index WRITE path — [[streamPqIndexAppend]]'s sibling on
     * the graph family (NSW insertion, Malkov et al.: a new point's
@@ -2764,62 +1786,25 @@ object StreamAssembly {
                                 crashAfterBatches: Int): String =
     memoDrain(spark, sfDir, "graph-insert", fleet, nFiles,
         crashAfterBatches) {
-    import java.nio.file.Files
-    import graft.ops.{KnnGraph, Similarity}
-    val tmp = Files.createTempDirectory("graft_graph_insert").toString
-    val outDir = s"$tmp/segments"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(fleet)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    import graft.ops.KnnGraph
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      fleet, nFiles, "vec_id", "embedding")
     val edges = KnnGraph.servingGraph(spark, sfDir)
       .select(col("src"), col("dst"))
     val idx = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 2 === 0)
       .select(col("vec_id"), col("embedding"))
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val idxS = idx.select(col("vec_id"), col("embedding"),
-        Similarity.dot(col("embedding"), col("embedding")).as("sq"))
-        .localCheckpoint(true)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(embSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-        val query = stream.writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val qs = batch.select(col("vec_id").as("q_id"),
-              col("embedding").as("q_emb"),
-              Similarity.dot(col("embedding"), col("embedding")).as("q_sq"))
-            KnnGraph.greedySearch(qs, idxS, edges)
-              .filter(col("rn") <= KnnGraph.InsertFanout)
-              .select(col("q_id").as("vec_id"),
-                col("rn").cast("long").as("rank"), col("v").as("nbr"),
-                floor(col("dist") * lit(1e6)).cast("long").as("dist_u"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/batch=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
+    Drain.run(spark, "graft_graph_insert", Seq(src),
+        crashAfterBatches = crashAfterBatches) { d =>
+      val idxS = greedyIndex(d, idx)
+      d.foreachBatch(d.open(src)) { batch =>
+        KnnGraph.greedySearch(greedyQueries(batch), idxS, edges)
+          .filter(col("rn") <= KnnGraph.InsertFanout)
+          .select(col("q_id").as("vec_id"),
+            col("rn").cast("long").as("rank"), col("v").as("nbr"),
+            floor(col("dist") * lit(1e6)).cast("long").as("dist_u"))
       }
-      runWithInjectedCrash(drain, crashAfterBatches)
     }
-    outDir
   }
 
   /** SERVING FROM THE ACCRETED GRAPH INDEX — the read side the write
@@ -2916,17 +1901,9 @@ object StreamAssembly {
     */
   def streamPqProbe(spark: SparkSession, sfDir: String,
                     nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Similarity
-    val tmp = Files.createTempDirectory("graft_pq_probe").toString
-    val outDir = s"$tmp/matches"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      col("vec_id") % 2 === 1, nFiles, "vec_id", "embedding")
     // static: centroid axis + residual codebook + 8-byte-and-a-cell
     // index codes. Built on the OUTER session BEFORE the drain clone —
     // the model memo is context-keyed and the checkpointed blocks are
@@ -2936,37 +1913,18 @@ object StreamAssembly {
     val (centsS, cbS, codesD) = Similarity.ivfpqProbeModel(spark, sfDir)
     val codes = codesD
       .select(col("vec_id").as("m_id"), col("cell"), col("s"), col("cid"))
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      val stream = ds.readStream
-        .schema(embSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val qtab = Similarity.cellResidualTables(
-            batch.select(col("vec_id").as("q_id"), col("embedding")),
-            centsS, cbS)
-          Similarity.adcScoresCell(codes, qtab)
-            .groupBy("q_id")
-            .agg(min(struct(col("adc"), col("m_id"))).as("best"))
-            .select(col("q_id"), col("best.m_id").as("match_id"),
-              col("best.adc").as("adc_dist"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val outDir = Drain.run(spark, "graft_pq_probe", Seq(src)) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src)) { batch =>
+        val qtab = Similarity.cellResidualTables(
+          batch.select(col("vec_id").as("q_id"), col("embedding")),
+          centsS, cbS)
+        Similarity.adcScoresCell(codes, qtab)
+          .groupBy("q_id")
+          .agg(min(struct(col("adc"), col("m_id"))).as("best"))
+          .select(col("q_id"), col("best.m_id").as("match_id"),
+            col("best.adc").as("adc_dist"))
+      }
     }
     spark.read.parquet(outDir)
       .select(col("q_id").as("vec_id"), col("match_id"), col("adc_dist"))
@@ -3003,7 +1961,7 @@ object StreamAssembly {
     * the appended code rows) and [[streamPqServeAccreted]] (gate =
     * queries SERVED from base ∪ segments): vectors matching `fleet`
     * are coded row-locally against the frozen even-half IVFADC model
-    * and appended as idempotent `segment=<id>` trees. Returns the
+    * and appended as idempotent `batch=<id>` trees. Returns the
     * segment directory.
     */
   private[graft] def drainPqAppends(spark: SparkSession, sfDir: String,
@@ -3012,56 +1970,23 @@ object StreamAssembly {
                              crashAfterBatches: Int): String =
     memoDrain(spark, sfDir, "pq-append", fleet, nFiles,
         crashAfterBatches) {
-    import java.nio.file.Files
     import graft.ops.Similarity
-    val tmp = Files.createTempDirectory("graft_pq_append").toString
-    val outDir = s"$tmp/segments"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(fleet)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      fleet, nFiles, "vec_id", "embedding")
     // frozen model, built/reused on the outer session (context-keyed
     // memo — shared with the probe drain and the batch consumers)
     val (centsS, cbS, _) = Similarity.ivfpqProbeModel(spark, sfDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(embSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-        val query = stream.writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            Similarity.ivfpqCode(batch, centsS, cbS)
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/segment=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
-      }
-      runWithInjectedCrash(drain, crashAfterBatches)
+    Drain.run(spark, "graft_pq_append", Seq(src),
+        crashAfterBatches = crashAfterBatches) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src))(Similarity.ivfpqCode(_, centsS, cbS))
     }
-    outDir
   }
 
   /** SERVING FROM THE ACCRETED PQ INDEX — [[streamGraphServeAccreted]]'s
     * sibling on the compressed family, closing the same lifecycle gap:
     * one quarter of the vectors (vec_id ≡ 1 mod 4) stream in and are
-    * coded against the FROZEN even-half IVFADC model into `segment=<id>`
+    * coded against the FROZEN even-half IVFADC model into `batch=<id>`
     * trees; the segments are then READ BACK, unioned with the base
     * even-half codes, and the query fleet (vec_id ≡ 3 mod 4) probes the
     * accreted index — per-query residual distance tables against the
@@ -3127,42 +2052,12 @@ object StreamAssembly {
                                      crashAfterBatches: Int): String =
     memoDrain(spark, sfDir, "tombstone", deleted, nFiles,
         crashAfterBatches) {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_tombstones").toString
-    val outDir = s"$tmp/segments"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(deleted)
-      .select(col("vec_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val idSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType)))
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(idSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-        val query = stream.writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.select(col("vec_id"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/batch=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
-      }
-      runWithInjectedCrash(drain, crashAfterBatches)
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      deleted, nFiles, "vec_id")
+    Drain.run(spark, "graft_tombstones", Seq(src),
+        crashAfterBatches = crashAfterBatches) { d =>
+      d.foreachBatch(d.open(src))(_.select(col("vec_id")))
     }
-    outDir
   }
 
   /** Tombstoned vec_ids ∧ even — the delete fixture shared by both
@@ -3379,7 +2274,7 @@ object StreamAssembly {
     * planes of [[graft.ops.Similarity.lshSignature]] — the "model" is
     * a pure deterministic function, so unlike the PQ/graph families
     * there is nothing to train, broadcast, or refresh) and appends its
-    * (vec_id, sig) rows as idempotent `segment=<id>` trees. The LSH
+    * (vec_id, sig) rows as idempotent `batch=<id>` trees. The LSH
     * family is the one whose index is PURELY ADDITIVE: serving is a
     * bucket equi-join over the union of signature rows, so the fold is
     * exactly [[graft.storage.Storage.compactBatchSink]] — no warm
@@ -3406,49 +2301,18 @@ object StreamAssembly {
                                      crashAfterBatches: Int): String =
     memoDrain(spark, sfDir, "lsh-append", fleet, nFiles,
         crashAfterBatches) {
-    import java.nio.file.Files
     import graft.ops.Similarity
-    val tmp = Files.createTempDirectory("graft_lsh_append").toString
-    val outDir = s"$tmp/segments"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(fleet)
-      .select(col("vec_id"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      def drain(arm: CrashArm): Unit = {
-        val stream = ds.readStream
-          .schema(embSchema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(srcDir)
-        val query = stream.writeStream
-          .outputMode("append")
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckptDir)
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            batch.select(col("vec_id"),
-              Similarity.lshSignature(col("embedding"), dim = 64,
-                nPlanes = LshIndexBandBits * LshIndexBands).as("sig"))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"$outDir/segment=$id")
-            arm.maybeCrash(id)
-            ()
-          }
-          .start()
-        query.awaitTermination()
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      fleet, nFiles, "vec_id", "embedding")
+    Drain.run(spark, "graft_lsh_append", Seq(src),
+        crashAfterBatches = crashAfterBatches) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src)) {
+        _.select(col("vec_id"),
+          Similarity.lshSignature(col("embedding"), dim = 64,
+            nPlanes = LshIndexBandBits * LshIndexBands).as("sig"))
       }
-      runWithInjectedCrash(drain, crashAfterBatches)
     }
-    outDir
   }
 
   /** SERVING FROM THE ACCRETED LSH INDEX — the bucket-join serving the
@@ -3626,50 +2490,24 @@ object StreamAssembly {
                        nFiles: Int = 3,
                        thresholdPerMille: Long = 34L,
                        k: Int = 64): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.HeavyHitters
     // the batch twin's guard: the pigeonhole superset argument needs
     // k >= 1000/threshold, or a heavy token can be evicted from EVERY
     // per-batch sketch and silently vanish from the candidate union
     require(k >= (1000L + thresholdPerMille - 1) / thresholdPerMille,
       "MG guarantee needs k >= 1000/thresholdPerMille")
-    val tmp = Files.createTempDirectory("graft_mg_partials").toString
-    val outDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      import ds.implicits._
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select(explode(split(col("text"), " ")).as("w"))
-            .as[String]
-            .groupByKey(_ => 0)
-            .agg(new HeavyHitters.MisraGries(k).toColumn.name("mg"))
-            .flatMap { case (_, m) => m.toSeq }
-            .toDF("w", "c")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "text")
+    val outDir = Drain.run(spark, "graft_mg_partials", Seq(src)) { d =>
+      import d.session.implicits._
+      d.foreachBatch(d.open(src)) {
+        _.select(explode(split(col("text"), " ")).as("w"))
+          .as[String]
+          .groupByKey(_ => 0)
+          .agg(new HeavyHitters.MisraGries(k).toColumn.name("mg"))
+          .flatMap { case (_, m) => m.toSeq }
+          .toDF("w", "c")
+      }
     }
     // read side: candidate keys ∪ over partials, exact recount, threshold
     val cand = spark.read.parquet(outDir).select("w").distinct()
@@ -3702,40 +2540,14 @@ object StreamAssembly {
     */
   def streamCmsPartials(spark: SparkSession, sfDir: String,
                         nFiles: Int = 3, topN: Int = 50): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.HeavyHitters
-    val tmp = Files.createTempDirectory("graft_cms_partials").toString
-    val outDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          HeavyHitters.cmsOf(
-            batch.select(explode(split(col("text"), " ")).as("w")))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "text")
+    val outDir = Drain.run(spark, "graft_cms_partials", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)) { batch =>
+        HeavyHitters.cmsOf(
+          batch.select(explode(split(col("text"), " ")).as("w")))
+      }
     }
     serveCmsMerged(spark, sfDir, outDir, topN)
   }
@@ -3791,43 +2603,15 @@ object StreamAssembly {
     * can read the partial segments: returns the partials directory. */
   private[graft] def drainSamplePartials(spark: SparkSession, sfDir: String,
                                          nFiles: Int, k: Int): String = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_sample_partials").toString
-    val outDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("source"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType)))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.select(col("doc_id"), col("source"),
-              md5(concat(lit("smp"), col("doc_id").cast("string")))
-                .as("prio"))
-            .orderBy("prio").limit(k)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "source")
+    Drain.run(spark, "graft_sample_partials", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)) {
+        _.select(col("doc_id"), col("source"),
+            md5(concat(lit("smp"), col("doc_id").cast("string"))).as("prio"))
+          .orderBy("prio").limit(k)
+      }
     }
-    outDir
   }
 
   /** The merge-and-serve read side of [[streamSamplePartials]], split
@@ -3860,42 +2644,14 @@ object StreamAssembly {
     */
   def streamBloomProbe(spark: SparkSession, sfDir: String,
                        nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.TrainingSets
-    val tmp = Files.createTempDirectory("graft_bloom_probe").toString
-    val outDir = s"$tmp/verdicts"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "text")
     // frozen filter, built/reused on the outer session
     val positions = TrainingSets.bloomModel(spark, sfDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          TrainingSets.bloomVerdict(batch, positions)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val outDir = Drain.run(spark, "graft_bloom_probe", Seq(src)) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src))(TrainingSets.bloomVerdict(_, positions))
     }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("n_shingles"), col("n_hit_shingles"),
@@ -3928,46 +2684,16 @@ object StreamAssembly {
     */
   def streamNbProbe(spark: SparkSession, sfDir: String,
                     nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.TrainingSets
-    val tmp = Files.createTempDirectory("graft_nb_probe").toString
-    val outDir = s"$tmp/preds"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("lang"), col("text"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "lang", "text")
     // frozen model, built/reused on the outer session (context-keyed
     // memo — retraining inside the drain was the r13 stream_pq_probe
     // regression; same fix applied from the start here)
     val model = TrainingSets.nbModel(spark, sfDir, "even")
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType)))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          TrainingSets.nbScore(batch, model)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val outDir = Drain.run(spark, "graft_nb_probe", Seq(src)) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src))(TrainingSets.nbScore(_, model))
     }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("true_lang"), col("pred_lang"))
@@ -3995,46 +2721,15 @@ object StreamAssembly {
     */
   def streamCentroidProbe(spark: SparkSession, sfDir: String,
                           nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.Similarity
-    val tmp = Files.createTempDirectory("graft_cent_probe").toString
-    val outDir = s"$tmp/preds"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") % 2 === 1)
-      .select(col("vec_id"), col("label"), col("embedding"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, graft.Tables.embeddings(spark, sfDir),
+      col("vec_id") % 2 === 1, nFiles, "vec_id", "label", "embedding")
     // frozen model, built/reused on the outer session (context-keyed
     // memo — the streamNbProbe discipline)
     val model = Similarity.centroidModel(spark, sfDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val embSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("label",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType))))
-      val stream = ds.readStream
-        .schema(embSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          Similarity.centroidScore(batch, model)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val outDir = Drain.run(spark, "graft_cent_probe", Seq(src)) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src))(Similarity.centroidScore(_, model))
     }
     spark.read.parquet(outDir)
       .select(col("vec_id"), col("true_label"), col("pred_label"))
@@ -4066,17 +2761,9 @@ object StreamAssembly {
     */
   def streamCurationVerdict(spark: SparkSession, sfDir: String,
                             nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
     import graft.ops.{TextAnalysis, TrainingSets}
-    val tmp = Files.createTempDirectory("graft_curation_verdict").toString
-    val outDir = s"$tmp/verdicts"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .filter(col("doc_id") % 2 === 1)
-      .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
+    val src = stageIncoming(spark, graft.Tables.documents(spark, sfDir),
+      col("doc_id") % 2 === 1, nFiles, "doc_id", "lang", "text", "n_chars")
     // statics on the outer session: the historical content-hash index
     // (materialized once) and the even-trained NB model (shared memo)
     val dupIdx = graft.Tables.documents(spark, sfDir)
@@ -4084,47 +2771,25 @@ object StreamAssembly {
       .select(md5(col("text")).as("h")).distinct()
       .localCheckpoint(true)
     val model = TrainingSets.nbModel(spark, sfDir, "even")
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      graft.functions.GraftFunctions.register(ds)
-      val docSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("lang",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n_chars",
-          org.apache.spark.sql.types.LongType)))
-      val stream = ds.readStream
-        .schema(docSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val ff = TextAnalysis.funnelFirstFail(batch.sparkSession, batch)
-            .select(col("doc_id"), col("first_fail"))
-          val dup = batch.withColumn("h", md5(col("text")))
-            .join(broadcast(dupIdx), Seq("h"), "left_semi")
-            .select(col("doc_id"), lit(true).as("is_dup"))
-          val pred = TrainingSets.nbScore(batch, model)
-          ff.join(dup, Seq("doc_id"), "left_outer")
-            .join(pred, Seq("doc_id"))
-            .select(col("doc_id"),
-              when(col("first_fail") > 0,
-                concat(lit("gate"), col("first_fail")))
-                .when(coalesce(col("is_dup"), lit(false)), "duplicate")
-                .when(col("pred_lang") =!= col("true_lang"),
-                  "lang_mismatch")
-                .otherwise("kept").as("verdict"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val outDir = Drain.run(spark, "graft_curation_verdict", Seq(src)) { d =>
+      graft.functions.GraftFunctions.register(d.session)
+      d.foreachBatch(d.open(src)) { batch =>
+        val ff = TextAnalysis.funnelFirstFail(batch.sparkSession, batch)
+          .select(col("doc_id"), col("first_fail"))
+        val dup = batch.withColumn("h", md5(col("text")))
+          .join(broadcast(dupIdx), Seq("h"), "left_semi")
+          .select(col("doc_id"), lit(true).as("is_dup"))
+        val pred = TrainingSets.nbScore(batch, model)
+        ff.join(dup, Seq("doc_id"), "left_outer")
+          .join(pred, Seq("doc_id"))
+          .select(col("doc_id"),
+            when(col("first_fail") > 0,
+              concat(lit("gate"), col("first_fail")))
+              .when(coalesce(col("is_dup"), lit(false)), "duplicate")
+              .when(col("pred_lang") =!= col("true_lang"),
+                "lang_mismatch")
+              .otherwise("kept").as("verdict"))
+      }
     }
     spark.read.parquet(outDir)
       .select(col("doc_id"), col("verdict"))
@@ -4146,48 +2811,25 @@ object StreamAssembly {
     */
   def streamMediaDecode(spark: SparkSession, sfDir: String,
                         nFiles: Int = 3): DataFrame = {
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_media_stream").toString
-    val outDir = s"$tmp/partials"
-    val ckptDir = s"$tmp/ckpt"
-    val srcDir = s"$tmp/incoming"
-    graft.Tables.documents(spark, sfDir)
-      .select(col("doc_id"))
-      .repartition(nFiles)
-      .write.mode("overwrite").parquet(srcDir)
-    withDrainConf(spark, srcDirs = Seq(srcDir)) { ds =>
-      val idSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType)))
-      val stream = ds.readStream
-        .schema(idSchema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(srcDir)
-      val query = stream.writeStream
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          import batch.sparkSession.implicits._
-          batch.select(col("doc_id")).as[Long]
-            .mapPartitions(_.flatMap { docId =>
-              graft.multimodal.Multimodal
-                .decodeOne(graft.multimodal.Multimodal.encodeOne(docId))
-                .map(_.copy(doc_id = docId))
-            })
-            .groupBy("media_type")
-            .agg(count(lit(1)).as("n"),
-              sum("width").as("sum_width"),
-              sum("height").as("sum_height"),
-              sum("channels").as("sum_channels"),
-              sum("duration_ms").as("sum_duration_ms"),
-              sum("body_len").as("sum_body_len"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/batch=$id")
-          ()
-        }
-        .start()
-      query.awaitTermination()
+    val src = Drain.stage(spark, "incoming", graft.Tables.documents(spark,
+      sfDir).select(col("doc_id")).repartition(nFiles))
+    val outDir = Drain.run(spark, "graft_media_stream", Seq(src)) { d =>
+      d.foreachBatch(d.open(src)) { batch =>
+        import batch.sparkSession.implicits._
+        batch.select(col("doc_id")).as[Long]
+          .mapPartitions(_.flatMap { docId =>
+            graft.multimodal.Multimodal
+              .decodeOne(graft.multimodal.Multimodal.encodeOne(docId))
+              .map(_.copy(doc_id = docId))
+          })
+          .groupBy("media_type")
+          .agg(count(lit(1)).as("n"),
+            sum("width").as("sum_width"),
+            sum("height").as("sum_height"),
+            sum("channels").as("sum_channels"),
+            sum("duration_ms").as("sum_duration_ms"),
+            sum("body_len").as("sum_body_len"))
+      }
     }
     spark.read.parquet(outDir)
       .groupBy("media_type")

@@ -20,7 +20,8 @@ import graft.streaming.StreamAssembly
 
 /** The shell-free `file:` file system: `core-site.xml` registers it for
   * both Hadoop APIs, it answers exactly as the stock local file system
-  * does, and checkpoint, sink and table-read paths start no process.
+  * does, and checkpoint, sink, finite-drain and table-read paths start no
+  * process.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -146,6 +147,10 @@ class LocalFsSpec extends SparkSpec {
       try batches.foreach { b => stream.addData(b); q.processAllAvailable() }
       finally q.stop()
       assert(Tables.events(spark, sf).count() === 1)
+      // a finite drain: staging, the drain and its read-back (a fresh
+      // session so the staged-source memo cannot skip the staging)
+      assert(StreamAssembly.streamStaticEnrich(spark.newSession(),
+        "/root/testdata/sf0.001").collect().nonEmpty)
     }
     assert(started.isEmpty, started.mkString("; "))
     assert(new java.io.File(ckDir, "commits").list()
